@@ -6,6 +6,20 @@ compact per-document signature with engine-native hashes (one scan, pure
 expressions), band/bucket the signature, equi-join on bucket to generate
 candidate pairs, then verify candidates exactly. Nothing is ever pairwise
 over the full corpus — the only quadratic work is within buckets.
+
+The pair-emitting variants first collapse documents with identical
+comparison keys (shingle set, token set, block + head, vector) into one
+group. Collapsing is exact because members of a group share every score:
+whatever one member scores against another document, all of them do. So
+candidate generation and verify run once per distinct group, and member
+expansion afterwards gives the same output as member-grain work. The
+shared steps are one helper each: ``_collapse`` (group + checkpoint),
+``_shingle_sets`` / ``_token_sets`` (the two set builders),
+``_minhash_bands``, ``_verify_set_pairs`` (the set-similarity verify,
+scored by the caller), ``_within_pairs`` and ``_cross_pairs`` (member
+expansion). Candidate generation stays with each operator: banding,
+jaccard's symmetric prefix join, containment's one-sided prefix join,
+the levenshtein block join.
 """
 
 from __future__ import annotations
@@ -138,6 +152,137 @@ def minhash_signature(shingle_col, num_hashes: int = 16):
     )
 
 
+def _collapse(df: DataFrame, id_col: str, *keys: str, **derived) -> DataFrame:
+    """Identical-key collapse: one row per distinct ``keys`` value with
+    ``gid`` = min ``id_col`` and the sorted ``members`` list, plus any
+    ``derived`` columns computed before the one ``localCheckpoint`` that
+    every consumer (candidate sides, verify sides, member expansions)
+    then shares. Widening is left to the caller: AQE coalesces the small
+    aggregate to one partition, and some plans widen only their probe
+    side."""
+    groups = df.groupBy(*keys).agg(
+        F.min(id_col).alias("gid"),
+        F.sort_array(F.collect_list(id_col)).alias("members"),
+    )
+    for name, col in derived.items():
+        groups = groups.withColumn(name, col)
+    return groups.localCheckpoint()
+
+
+def _shingle_sets(docs: DataFrame) -> DataFrame:
+    """Distinct 3-shingle sets of a ``documents``-shaped relation,
+    collapsed: ``(sh_set, gid, members)``. The parallelism guard runs
+    before the shingling (one task on a single-row-group file otherwise)
+    and again on the checkpointed collapse, ahead of the signature fold
+    and verify intersections."""
+    from ..partitioning import ensure_parallelism
+
+    corpus = ensure_parallelism(docs).select(
+        "doc_id", F.array_distinct(shingles(_tokens())).alias("sh_set")
+    )
+    return ensure_parallelism(_collapse(corpus, "doc_id", "sh_set"))
+
+
+def _minhash_bands(sets: DataFrame) -> DataFrame:
+    """``(gid, band_id, band_hash)``: 32-hash MinHash of each distinct
+    ``sh_set`` in 16 bands of 2. The signature is checkpointed before
+    banding: CollapseProject would otherwise inline the whole 32-hash
+    fold into each of the 16 band lambdas (24 s → ~2 s at sf0.01)."""
+    sig = sets.select(
+        "gid", minhash_signature(F.col("sh_set"), num_hashes=32).alias("sig")
+    ).localCheckpoint()
+    return sig.select(
+        "gid",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(15)),
+                lambda b: F.xxhash64(
+                    F.concat_ws(",", F.slice(F.col("sig"), b * 2 + 1, 2)), b
+                ),
+            )
+        ).alias("band_id", "band_hash"),
+    )
+
+
+def _within_pairs(sets: DataFrame, a: str, b: str) -> DataFrame:
+    """Every unordered pair inside each group's sorted ``members`` as
+    ``(a, b)`` with a < b: each member pairs with its strict suffix, so
+    the work is output-sized and needs no join."""
+    return (
+        sets.filter(F.size("members") >= 2)
+        .select(F.posexplode("members").alias("i", a), "members")
+        .select(a, F.explode(F.expr("slice(members, i + 2, size(members))")).alias(b))
+    )
+
+
+def _cross_pairs(
+    pairs: DataFrame, ma: str, mb: str, a: str, b: str, score: str
+) -> DataFrame:
+    """Expand verified group pairs to member pairs: ``ma`` × ``mb`` as
+    ``(a, b, score)`` with a < b. Every member of a group shares the
+    group's score, so one verdict per group pair covers all of them."""
+    return (
+        pairs.select(F.explode(ma).alias("da"), mb, score)
+        .select("da", F.explode(mb).alias("db"), score)
+        .select(
+            F.least("da", "db").alias(a), F.greatest("da", "db").alias(b), score
+        )
+    )
+
+
+def _token_sets(docs: DataFrame, tau: float) -> DataFrame:
+    """Distinct lower-cased token sets as sorted rarity-rank arrays,
+    collapsed and widened: ``(rs, gid, members, n, plen)`` where ``n`` =
+    |set| and ``plen`` = n - ceil(tau·n) + 1 is the prefix length at
+    threshold ``tau``. Rank keys come from :func:`token_rank`'s
+    vocabulary-cardinality guard; token → rank is injective, so
+    intersect sizes on rank arrays equal token-set overlaps."""
+    from ..partitioning import ensure_parallelism
+
+    tok = docs.select(
+        "doc_id",
+        F.explode(F.array_distinct(F.split(F.lower(F.col("text")), " "))).alias(
+            "tok"
+        ),
+    )
+    rank, _strategy = token_rank(tok)
+    toksets = (
+        tok.join(rank, "tok")
+        .select("doc_id", F.col("r").alias("k"))
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list("k")).alias("rs"))
+    )
+    n = F.col("n")
+    return ensure_parallelism(
+        _collapse(
+            toksets, "doc_id", "rs",
+            n=F.size("rs"),
+            plen=n - F.ceil(F.lit(tau) * n).cast("int") + 1,
+        )
+    )
+
+
+def _verify_set_pairs(
+    cand: DataFrame, sets: DataFrame, tau: float, name: str, score
+) -> DataFrame:
+    """Exact verify of candidate set pairs ``(ga, gb)`` from
+    :func:`_token_sets`: ``(ga, gb, ma, mb, <name>)`` for pairs whose
+    ``score`` reaches ``tau``. ``score`` is an expression over ``inter``
+    (= |A∩B|, one integer array_intersect per pair), ``na`` and ``nb``."""
+    sa = sets.select(F.col("gid").alias("ga"), F.col("rs").alias("ra"),
+                     F.col("members").alias("ma"), F.col("n").alias("na"))
+    sb = sets.select(F.col("gid").alias("gb"), F.col("rs").alias("rb"),
+                     F.col("members").alias("mb"), F.col("n").alias("nb"))
+    return (
+        cand.join(sa, "ga")
+        .join(sb, "gb")
+        .withColumn("inter", F.size(F.array_intersect("ra", "rb")))
+        .withColumn(name, score)
+        .filter(F.col(name) >= tau)
+        .select("ga", "gb", "ma", "mb", name)
+    )
+
+
 @query(
     "q_dedup_near",
     oracle="""
@@ -204,59 +349,12 @@ def near_dup_pairs(documents: DataFrame) -> DataFrame:
     q_dedup_near (whose docstring carries the full design rationale) so
     composed pipelines (q_pipeline_pretrain) run the IDENTICAL pair
     semantics over an already-filtered survivor set."""
-    from ..partitioning import ensure_parallelism
-
-    # Parallelism guard before the compute-heavy projections: the
-    # shingle + 32-hash MinHash work would otherwise run with the scan's
-    # parallelism — one task on a single-row-group file. A well-split
-    # production corpus passes through with no added shuffle.
-    corpus = ensure_parallelism(documents)
-    # One row per DISTINCT shingle set, with the sorted member list.
-    # localCheckpoint materializes the shingling + collapse once: the
-    # table feeds the signature projection, both verify sides, and both
-    # member expansions. (Materializing signatures before banding remains
-    # essential — CollapseProject would otherwise inline the whole
-    # 32-hash expression into each of the 16 band lambdas, measured
-    # 24 s → ~2 s at sf0.01 in round 1.)
-    sets = (
-        corpus.select("doc_id", F.array_distinct(shingles(_tokens())).alias("sh_set"))
-        .groupBy("sh_set")
-        .agg(
-            F.min("doc_id").alias("gid"),
-            F.sort_array(F.collect_list("doc_id")).alias("members"),
-        )
-        .localCheckpoint()
-    )
-    # AQE coalesces the small collapse aggregate to one partition before
-    # the checkpoint freezes it; widen before the compute-heavy consumers
-    # (signature fold, verify intersections).
-    sets = ensure_parallelism(sets)
+    sets = _shingle_sets(documents)
     # Within-group pairs: identical shingle sets, jaccard exactly 1.0.
-    within = (
-        sets.filter(F.size("members") >= 2)
-        .select(F.posexplode("members").alias("i", "a_id"), "members")
-        .select(
-            "a_id",
-            F.explode(F.expr("slice(members, i + 2, size(members))")).alias("b_id"),
-        )
-        .withColumn("jaccard", F.lit(1.0))
-    )
+    within = _within_pairs(sets, "a_id", "b_id").withColumn("jaccard", F.lit(1.0))
     # MinHash over the distinct set (min over a set equals min over the
     # multiset, so values are unchanged), then 16×2 banding per gid.
-    sig = sets.select(
-        "gid", minhash_signature(F.col("sh_set"), num_hashes=32).alias("sig")
-    ).localCheckpoint()
-    bands = sig.select(
-        "gid",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(15)),
-                lambda b: F.xxhash64(
-                    F.concat_ws(",", F.slice(F.col("sig"), b * 2 + 1, 2)), b
-                ),
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    bands = _minhash_bands(sets)
     a = bands.select(F.col("gid").alias("ga"), "band_id", "band_hash")
     b = bands.select(F.col("gid").alias("gb"), "band_id", "band_hash")
     cand = (
@@ -271,21 +369,15 @@ def near_dup_pairs(documents: DataFrame) -> DataFrame:
                      F.col("members").alias("mb"))
     n_common = F.size(F.array_intersect("a_sh", "b_sh"))
     n_union = F.size("a_sh") + F.size("b_sh") - n_common
-    cross = (
+    verified = (
         cand.join(sa, "ga")
         .join(sb, "gb")
         .filter(n_common * 10 >= n_union * 8)
         .select(
             F.round(n_common.cast("double") / n_union, 6).alias("jaccard"), "ma", "mb"
         )
-        .select(F.explode("ma").alias("da"), "mb", "jaccard")
-        .select("da", F.explode("mb").alias("db"), "jaccard")
-        .select(
-            F.least("da", "db").alias("a_id"),
-            F.greatest("da", "db").alias("b_id"),
-            "jaccard",
-        )
     )
+    cross = _cross_pairs(verified, "ma", "mb", "a_id", "b_id", "jaccard")
     return within.unionByName(cross).select("a_id", "b_id", "jaccard")
 
 
@@ -308,32 +400,8 @@ def exact_dup_pairs(documents: DataFrame) -> DataFrame:
     is exact-enumeration work by DESIGN — at 100 TB the audit runs on a
     bounded corpus sample, and q_jaccard_join's PPJoin prefix filter is
     the in-repo escape path if the full corpus must be enumerated."""
-    from ..partitioning import ensure_parallelism
-
-    corpus = ensure_parallelism(documents)
-    sets = (
-        corpus.select(
-            "doc_id", F.array_distinct(shingles(_tokens())).alias("sh_set")
-        )
-        .groupBy("sh_set")
-        .agg(
-            F.min("doc_id").alias("gid"),
-            F.sort_array(F.collect_list("doc_id")).alias("members"),
-        )
-        .localCheckpoint()
-    )
-    sets = ensure_parallelism(sets)
-    within = (
-        sets.filter(F.size("members") >= 2)
-        .select(F.posexplode("members").alias("i", "a_id"), "members")
-        .select(
-            "a_id",
-            F.explode(
-                F.expr("slice(members, i + 2, size(members))")
-            ).alias("b_id"),
-        )
-        .withColumn("jaccard", F.lit(1.0))
-    )
+    sets = _shingle_sets(documents)
+    within = _within_pairs(sets, "a_id", "b_id").withColumn("jaccard", F.lit(1.0))
     grams = sets.select("gid", F.explode("sh_set").alias("gram"))
     inter = (
         grams.select(F.col("gid").alias("ga"), "gram")
@@ -353,7 +421,7 @@ def exact_dup_pairs(documents: DataFrame) -> DataFrame:
         F.col("members").alias("mb"),
     )
     n_union = F.col("na") + F.col("nb") - F.col("n_common")
-    return (
+    verified = (
         inter.join(sa, "ga")
         .join(sb, "gb")
         .filter(F.col("n_common") * 10 >= n_union * 8)
@@ -364,14 +432,9 @@ def exact_dup_pairs(documents: DataFrame) -> DataFrame:
             "ma",
             "mb",
         )
-        .select(F.explode("ma").alias("da"), "mb", "jaccard")
-        .select("da", F.explode("mb").alias("db"), "jaccard")
-        .select(
-            F.least("da", "db").alias("a_id"),
-            F.greatest("da", "db").alias("b_id"),
-            "jaccard",
-        )
-        .unionByName(within.select("a_id", "b_id", "jaccard"))
+    )
+    return _cross_pairs(verified, "ma", "mb", "a_id", "b_id", "jaccard").unionByName(
+        within
     )
 
 
@@ -418,12 +481,6 @@ def simhash_pack(votes):
     return F.shiftleft(pack32(F.slice(sign_bits, 1, 32)), 32).bitwiseOR(
         pack32(F.slice(sign_bits, 33, 32))
     )
-
-
-def simhash64(tokens_col):
-    """64-bit SimHash of a token array: per-token hash bits vote ±1 per bit
-    position; the sign vector packs into one bigint."""
-    return simhash_pack(simhash_votes(tokens_col))
 
 
 @query(
@@ -934,16 +991,9 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cos(u, x) is the same for every member of a group, group edges
     # reproduce member edges exactly. Member lists expand the labels at
     # the end.
-    sets = (
-        t.embeddings.select("vec_id", "embedding")
-        .groupBy("embedding")
-        .agg(
-            F.min("vec_id").alias("gid"),
-            F.collect_list("vec_id").alias("members"),
-        )
-        .localCheckpoint()
+    sets = ensure_parallelism(
+        _collapse(t.embeddings.select("vec_id", "embedding"), "vec_id", "embedding")
     )
-    sets = ensure_parallelism(sets)
     edges = cone_blocked_edges(sets.select("gid", "embedding"), _SEM_TAU)
     nodes = sets.select(F.col("gid").alias("id"))
     glabels = connected_components(nodes, edges)
@@ -996,22 +1046,9 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_chars") / F.lit(50)).cast("int").alias("len_bucket"),
         F.substring("text", 1, 30).alias("head"),
     )
-    groups = (
-        d.groupBy("lang", "len_bucket", "head")
-        .agg(
-            F.min("doc_id").alias("gid"),
-            F.sort_array(F.collect_list("doc_id")).alias("members"),
-        )
-        .localCheckpoint()
-    )
-    within = (
-        groups.filter(F.size("members") >= 2)
-        .select(F.posexplode("members").alias("i", "id_a"), "members")
-        .select(
-            "id_a",
-            F.explode(F.expr("slice(members, i + 2, size(members))")).alias("id_b"),
-        )
-        .withColumn("edit_dist", F.lit(0).cast("bigint"))
+    groups = _collapse(d, "doc_id", "lang", "len_bucket", "head")
+    within = _within_pairs(groups, "id_a", "id_b").withColumn(
+        "edit_dist", F.lit(0).cast("bigint")
     )
     cols = ["lang", "len_bucket", "head", "gid", "members"]
     a = ensure_parallelism(groups).select(*[F.col(c).alias(f"a_{c}") for c in cols])
@@ -1030,15 +1067,7 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("edit_dist") <= 5)
     )
-    cross = (
-        gpairs.select(F.explode("a_members").alias("da"), "b_members", "edit_dist")
-        .select("da", F.explode("b_members").alias("db"), "edit_dist")
-        .select(
-            F.least("da", "db").alias("id_a"),
-            F.greatest("da", "db").alias("id_b"),
-            "edit_dist",
-        )
-    )
+    cross = _cross_pairs(gpairs, "a_members", "b_members", "id_a", "id_b", "edit_dist")
     return within.unionByName(cross)
 
 
@@ -1208,14 +1237,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the k² per-duplicate-cluster levenshtein cost drops to 1. The
     # group id is the min member doc_id, so the component's min-gid root
     # IS the component's min doc_id and member labels expand directly.
-    groups = (
-        d.groupBy("lang", "lb", "head")
-        .agg(
-            F.min("doc_id").alias("gid"),
-            F.sort_array(F.collect_list("doc_id")).alias("members"),
-        )
-        .localCheckpoint()
-    )
+    groups = _collapse(d, "doc_id", "lang", "lb", "head")
     cols = ["lang", "lb", "head", "gid"]
     # AQE coalesces the small group aggregate to one partition before the
     # checkpoint freezes it; widen the levenshtein probe side.
@@ -1381,37 +1403,7 @@ def jaccard_set_core(docs: DataFrame, tau: float):
     (measured r12: the member-pair explosion at benchdata/sf10 — 100x
     duplicate depth, ~10^4 member pairs per set pair — wedged the sf10
     scale leg; the set-grain aggregate runs in seconds)."""
-    tok = (
-        docs.select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split(F.lower(F.col("text")), " "))).alias(
-                "tok"
-            ),
-        )
-    )
-    # Vocabulary-cardinality guard (see token_rank): small vocabularies
-    # rank via a summary-scale window and broadcast-join; above
-    # VOCAB_BROADCAST_CAP the rank is the two-pass range plan and the
-    # join back to the fact is a plain shuffle join.
-    rank, _strategy = token_rank(tok)
-    keyed = tok.join(rank, "tok").select("doc_id", F.col("r").alias("k"))
-    toksets = keyed.groupBy("doc_id").agg(F.sort_array(F.collect_list("k")).alias("rs"))
-    sets = (
-        toksets.groupBy("rs")
-        .agg(
-            F.min("doc_id").alias("gid"),
-            F.sort_array(F.collect_list("doc_id")).alias("members"),
-        )
-        .withColumn("n", F.size("rs"))
-        .withColumn("plen", F.col("n") - F.ceil(F.lit(tau) * F.col("n")).cast("int") + 1)
-        .localCheckpoint()
-    )
-    # AQE coalesces the small collapse aggregate to one partition before
-    # the checkpoint freezes it; widen before the candidate join and the
-    # verify intersections.
-    from ..partitioning import ensure_parallelism
-
-    sets = ensure_parallelism(sets)
+    sets = _token_sets(docs, tau)
     prefixes = sets.select(
         "gid",
         "n",
@@ -1450,22 +1442,9 @@ def jaccard_set_core(docs: DataFrame, tau: float):
         .select("ga", "gb")
         .dropDuplicates(["ga", "gb"])
     )
-    sa = sets.select(F.col("gid").alias("ga"), F.col("rs").alias("ra"),
-                     F.col("members").alias("ma"), F.col("n").alias("na"))
-    sb = sets.select(F.col("gid").alias("gb"), F.col("rs").alias("rb"),
-                     F.col("members").alias("mb"), F.col("n").alias("nb"))
-    inter = F.size(F.array_intersect("ra", "rb"))
-    cross_sets = (
-        cand.join(sa, "ga")
-        .join(sb, "gb")
-        .withColumn("inter", inter)
-        .withColumn(
-            "jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-        )
-        .filter(F.col("jaccard") >= tau)
-        .select("ga", "gb", "ma", "mb", "jaccard")
-    )
-    return sets, cross_sets
+    inter = F.col("inter")
+    jaccard = inter / (F.col("na") + F.col("nb") - inter)
+    return sets, _verify_set_pairs(cand, sets, tau, "jaccard", jaccard)
 
 
 def jaccard_pairs(
@@ -1482,25 +1461,8 @@ def jaccard_pairs(
     oracle does even when the true ratio sits within 5e-7 of a cut.
     Member-grain expansion of :func:`jaccard_set_core`."""
     sets, cross_sets = jaccard_set_core(docs, tau)
-    within = (
-        sets.filter(F.size("members") >= 2)
-        .select(F.posexplode("members").alias("i", "doc_a"), "members")
-        .select(
-            "doc_a",
-            F.explode(F.expr("slice(members, i + 2, size(members))")).alias("doc_b"),
-        )
-        .withColumn("jaccard", F.lit(1.0))
-    )
-    cross = (
-        cross_sets.select("ma", "mb", "jaccard")
-        .select(F.explode("ma").alias("da"), "mb", "jaccard")
-        .select("da", F.explode("mb").alias("db"), "jaccard")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
-    )
+    within = _within_pairs(sets, "doc_a", "doc_b").withColumn("jaccard", F.lit(1.0))
+    cross = _cross_pairs(cross_sets, "ma", "mb", "doc_a", "doc_b", "jaccard")
     # No output orderBy: a global sort of the pair list costs a full
     # range-partition + sort of the (at sf1) 96.7M-row output for pure
     # presentation — the driver's compare is order-insensitive, and at
@@ -1563,7 +1525,8 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference scope note: the reference engine has no similarity ops —
     this extends SURVEY §2.M's training-data family
     (`q_jaccard_join`, `q_contamination`)."""
-    sets, verified = _containment_sets_verified(spark, sf_dir, tau=0.9)
+    docs = load(spark, sf_dir).documents
+    sets, verified = _containment_sets_verified(docs, tau=0.9)
     # Identical sets: every ORDERED pair within a group is containment 1.0
     # (both directions — the relation is not symmetric, unlike jaccard's
     # a<b canonical form).
@@ -1587,47 +1550,11 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _containment_sets_verified(
-    spark: SparkSession, sf_dir: str, tau: float, stats: dict | None = None
-):
-    """Shared machinery of the containment family: distinct token sets
-    (collapsed, checkpointed, with sorted ``members``) plus the VERIFIED
-    cross-group pairs ``(ga, gb, ma, mb, containment)`` at GROUP
-    granularity — i.e. before any member expansion, so callers choose how
-    much output to materialize (full pair list vs capped top-k).
-
-    ``stats``, if given, receives the lazy intermediate DataFrames
-    (``sets``, ``cand``) for observability — the per-stage decomposition
-    script (scripts/containment_decomp.py) counts them; registered
-    queries never pass it, so there is no extra work on the query path."""
-    t = load(spark, sf_dir)
-    tok = t.documents.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split(F.lower(F.col("text")), " "))).alias(
-            "tok"
-        ),
-    )
-    # Same vocabulary-cardinality guard as q_jaccard_join (token_rank).
-    rank, _strategy = token_rank(tok)
-    keyed = tok.join(rank, "tok").select("doc_id", F.col("r").alias("k"))
-    toksets = keyed.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("k")).alias("rs")
-    )
-    sets = (
-        toksets.groupBy("rs")
-        .agg(
-            F.min("doc_id").alias("gid"),
-            F.sort_array(F.collect_list("doc_id")).alias("members"),
-        )
-        .withColumn("n", F.size("rs"))
-        .withColumn(
-            "plen", F.col("n") - F.ceil(F.lit(tau) * F.col("n")).cast("int") + 1
-        )
-        .localCheckpoint()
-    )
-    from ..partitioning import ensure_parallelism
-
-    sets = ensure_parallelism(sets)
+def _containment_candidates(sets: DataFrame, tau: float) -> DataFrame:
+    """Containment candidate set pairs ``(ga, gb)`` over
+    :func:`_token_sets`: A's one-sided prefix probes the FULL token
+    index of every other set, with the length filter |B| >= ceil(tau·|A|)
+    (see q_containment_join)."""
     probe = sets.select(
         F.col("gid").alias("ga"),
         F.col("n").alias("na"),
@@ -1638,7 +1565,7 @@ def _containment_sets_verified(
         F.col("n").alias("nb"),
         F.explode("rs").alias("pkey"),
     )
-    cand = (
+    return (
         probe.join(
             index,
             (probe["pkey"] == index["pkey"])
@@ -1648,27 +1575,18 @@ def _containment_sets_verified(
         .select("ga", "gb")
         .dropDuplicates(["ga", "gb"])
     )
-    sa = sets.select(
-        F.col("gid").alias("ga"), F.col("rs").alias("ra"),
-        F.col("members").alias("ma"), F.col("n").alias("na"),
-    )
-    sb = sets.select(
-        F.col("gid").alias("gb"), F.col("rs").alias("rb"),
-        F.col("members").alias("mb"),
-    )
-    verified = (
-        cand.join(sa, "ga")
-        .join(sb, "gb")
-        .withColumn(
-            "containment",
-            F.size(F.array_intersect("ra", "rb")) / F.col("na"),
-        )
-        .filter(F.col("containment") >= tau)
-        .select("ga", "gb", "ma", "mb", "containment")
-    )
-    if stats is not None:
-        stats["sets"], stats["cand"] = sets, cand
-    return sets, verified
+
+
+def _containment_sets_verified(docs: DataFrame, tau: float):
+    """Shared machinery of the containment family: distinct token sets
+    (collapsed, checkpointed, with sorted ``members``) plus the VERIFIED
+    cross-group pairs ``(ga, gb, ma, mb, containment)`` at GROUP
+    granularity — i.e. before any member expansion, so callers choose how
+    much output to materialize (full pair list vs capped top-k)."""
+    sets = _token_sets(docs, tau)
+    cand = _containment_candidates(sets, tau)
+    containment = F.col("inter") / F.col("na")
+    return sets, _verify_set_pairs(cand, sets, tau, "containment", containment)
 
 
 @query(
@@ -1728,7 +1646,8 @@ def q_containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     k = 3
-    sets, verified = _containment_sets_verified(spark, sf_dir, tau=0.9)
+    docs = load(spark, sf_dir).documents
+    sets, verified = _containment_sets_verified(docs, tau=0.9)
     # Within-group: all scores are 1.0 and the tie-break is doc_b asc, so
     # a doc's best k witnesses among its m-1 twins are the k smallest
     # other ids — all inside the first k+1 elements of the sorted member
@@ -1865,45 +1784,12 @@ def incremental_near_dedup(
     (doc_id, n_matches, best_jaccard, first_match_id, is_novel), matches
     at exact distinct-shingle Jaccard >= 0.8. Same collapse / band /
     verify machinery as near_dup_pairs, split by side."""
-    from ..partitioning import ensure_parallelism
-
-    def sets_of(docs: DataFrame) -> DataFrame:
-        return ensure_parallelism(
-            ensure_parallelism(docs)
-            .select(
-                "doc_id", F.array_distinct(shingles(_tokens())).alias("sh_set")
-            )
-            .groupBy("sh_set")
-            .agg(
-                F.min("doc_id").alias("gid"),
-                F.sort_array(F.collect_list("doc_id")).alias("members"),
-            )
-            .localCheckpoint()
-        )
-
-    bsets, csets = sets_of(batch_docs), sets_of(corpus_docs)
-
-    def bands_of(sets_df: DataFrame) -> DataFrame:
-        sig = sets_df.select(
-            "gid", minhash_signature(F.col("sh_set"), num_hashes=32).alias("sig")
-        ).localCheckpoint()
-        return sig.select(
-            "gid",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(15)),
-                    lambda b: F.xxhash64(
-                        F.concat_ws(",", F.slice(F.col("sig"), b * 2 + 1, 2)), b
-                    ),
-                )
-            ).alias("band_id", "band_hash"),
-        )
-
+    bsets, csets = _shingle_sets(batch_docs), _shingle_sets(corpus_docs)
     cand = (
-        bands_of(bsets)
+        _minhash_bands(bsets)
         .select(F.col("gid").alias("bgid"), "band_id", "band_hash")
         .join(
-            bands_of(csets).select(
+            _minhash_bands(csets).select(
                 F.col("gid").alias("cgid"), "band_id", "band_hash"
             ),
             ["band_id", "band_hash"],

@@ -53,15 +53,18 @@ def ensure_parallelism(
         # Plan-stat probe via private py4j internals (no public size-estimate
         # API exists). Scoped to the py4j/attribute error classes an API
         # drift would raise, and logged, so a Spark upgrade that moves the
-        # accessor can't silently disable the cap (ADVICE r13).
-        import py4j.protocol
-
+        # accessor can't silently disable the cap (ADVICE r13). A client
+        # without py4j falls back to the core-count target as well.
+        probe_errors: tuple = (AttributeError, ValueError, TypeError)
         try:
+            import py4j.protocol
+
+            probe_errors += (py4j.protocol.Py4JError,)
             est = int(
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
             target = max(1, min(target, -(-est // bytes_per_task)))
-        except (py4j.protocol.Py4JError, AttributeError, ValueError, TypeError) as ex:
+        except (ImportError, *probe_errors) as ex:
             logger.debug(
                 "ensure_parallelism: plan-size probe failed (%s); "
                 "falling back to core-count target %d", ex, target

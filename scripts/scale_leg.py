@@ -62,14 +62,11 @@ from crypto_data_ingestion_script_spark.catalog import load  # noqa: E402
 from crypto_data_ingestion_script_spark.llm.dedup import (  # noqa: E402
     LCP_MIN,
     SUFFIX_CAP,
+    _containment_candidates,
     _containment_sets_verified,
-    _tokens,
-    minhash_signature,
-    shingles,
+    _minhash_bands,
+    _shingle_sets,
     simhash64,
-)
-from crypto_data_ingestion_script_spark.partitioning import (  # noqa: E402
-    ensure_parallelism,
 )
 from crypto_data_ingestion_script_spark.registry import load_all  # noqa: E402
 
@@ -93,35 +90,14 @@ def leg(sf_dir: str) -> dict:
     # ---- q_dedup_near ----------------------------------------------------
     rec: dict = {"stages": {}, "counts": {}}
     s, c = rec["stages"], rec["counts"]
-    corpus = ensure_parallelism(docs)
-    sets = (
-        corpus.select("doc_id", F.array_distinct(shingles(_tokens())).alias("sh_set"))
-        .groupBy("sh_set")
-        .agg(F.min("doc_id").alias("gid"),
-             F.sort_array(F.collect_list("doc_id")).alias("members"))
-        .localCheckpoint()
-    )
-    c["n_distinct_sets"] = tick(s, "s1_set_collapse", sets.count)
+    sets = tick(s, "s1_set_collapse", lambda: _shingle_sets(docs))
+    c["n_distinct_sets"] = sets.count()
     depth = sets.agg(
         F.max(F.size("members")).alias("mx"),
         F.sum(F.size("members")).alias("n"),
     ).collect()[0]
     c["max_cluster_depth"], c["n_docs"] = int(depth["mx"]), int(depth["n"])
-    sets2 = ensure_parallelism(sets)
-    sig = sets2.select(
-        "gid", minhash_signature(F.col("sh_set"), num_hashes=32).alias("sig")
-    ).localCheckpoint()
-    bands = sig.select(
-        "gid",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(15)),
-                lambda b: F.xxhash64(
-                    F.concat_ws(",", F.slice(F.col("sig"), b * 2 + 1, 2)), b
-                ),
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    bands = _minhash_bands(sets)
     a = bands.select(F.col("gid").alias("ga"), "band_id", "band_hash")
     b = bands.select(F.col("gid").alias("gb"), "band_id", "band_hash")
     cand = (
@@ -212,12 +188,12 @@ def leg(sf_dir: str) -> dict:
     # ---- containment family ------------------------------------------------
     rec = {"stages": {}, "counts": {}}
     s, c = rec["stages"], rec["counts"]
-    stats: dict = {}
     t0 = time.perf_counter()
-    sets, verified = _containment_sets_verified(spark, sf_dir, tau=0.9, stats=stats)
+    sets, verified = _containment_sets_verified(docs, tau=0.9)
     s["s1_build"] = round(time.perf_counter() - t0, 2)
     c["n_distinct_groups"] = sets.count()
-    c["n_candidate_group_pairs"] = tick(s, "s2_candidates", stats["cand"].count)
+    cand = _containment_candidates(sets, 0.9)
+    c["n_candidate_group_pairs"] = tick(s, "s2_candidates", cand.count)
     t0 = time.perf_counter()
     c["n_verified_group_pairs"] = verified.count()
     s["s3_verify"] = round(time.perf_counter() - t0 - s["s2_candidates"], 2)

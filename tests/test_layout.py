@@ -8,6 +8,7 @@ dimension that sort neglects."""
 
 from __future__ import annotations
 
+import builtins
 import glob
 import os
 import tempfile
@@ -150,12 +151,13 @@ def test_ensure_parallelism_guard(spark):
     assert ensure_parallelism(wide) is wide
 
 
-def test_ensure_parallelism_bytes_cap(spark, sf_dir):
+def test_ensure_parallelism_bytes_cap(spark, sf_dir, monkeypatch):
     """r13: ``bytes_per_task`` caps the widening at the planned input
     bytes — a sub-MB scan stays narrow (task dispatch would dominate a
     cheap per-row map stage), while a zero/None cap keeps the pure
     core-count widening, and the cap never widens BEYOND the session
-    parallelism."""
+    parallelism. Without py4j the probe falls back to the core-count
+    target instead of raising."""
     from crypto_data_ingestion_script_spark.partitioning import ensure_parallelism
 
     target = spark.sparkContext.defaultParallelism
@@ -167,3 +169,17 @@ def test_ensure_parallelism_bytes_cap(spark, sf_dir):
     # a 1-byte cap degenerates to the core-count target (bounded above).
     wide = ensure_parallelism(emb, bytes_per_task=1)
     assert wide.rdd.getNumPartitions() == target
+    # A client without py4j: the guard's own py4j import fails (pyspark's
+    # imports, which this process needs, still resolve).
+    real_import = builtins.__import__
+
+    def no_py4j_here(name, globals=None, *args, **kwargs):
+        if name.startswith("py4j") and (globals or {}).get("__name__", "").endswith(
+            ".partitioning"
+        ):
+            raise ImportError(name)
+        return real_import(name, globals, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "__import__", no_py4j_here)
+    no_py4j = ensure_parallelism(emb, bytes_per_task=32 << 20)
+    assert no_py4j.rdd.getNumPartitions() == max(target, emb.rdd.getNumPartitions())

@@ -568,33 +568,58 @@ def test_global_ntile_matches_window_ntile(spark, n, k):
 
 
 def test_member_slice_expansion_enumerates_all_pairs(spark):
-    """Three dedup queries (q_jaccard_join, q_dedup_near, q_dedup_fuzzy)
-    emit within-group pairs by pairing each sorted member with its strict
-    suffix via posexplode + slice. The idiom must enumerate every
-    unordered pair exactly once with a < b, for any group size including
-    the size-1 and size-2 edges."""
+    """The dedup family's shared member helpers. ``_within_pairs`` pairs
+    each sorted member with its strict suffix (posexplode + slice) and
+    must enumerate every unordered pair exactly once with a < b, for any
+    group size including the size-1 and size-2 edges. ``_cross_pairs``
+    must give |ma|·|mb| pairs with a < b carrying the group pair's score,
+    and ``_collapse`` must key each group by its min member with a
+    sorted member list. Zero-row inputs give zero rows."""
     from itertools import combinations
 
     from pyspark.sql import functions as F
+
+    from crypto_data_ingestion_script_spark.llm.dedup import (
+        _collapse,
+        _cross_pairs,
+        _within_pairs,
+    )
 
     groups = [[7], [3, 9], [1, 4, 6], [10, 20, 30, 40, 50]]
     df = spark.createDataFrame(
         [(i, sorted(g)) for i, g in enumerate(groups)],
         "gid int, members array<bigint>",
     )
-    pairs = (
-        df.filter(F.size("members") >= 2)
-        .select(F.posexplode("members").alias("i", "a"), "members")
-        .select(
-            "a",
-            F.explode(F.expr("slice(members, i + 2, size(members))")).alias("b"),
-        )
-    )
-    got = sorted((r["a"], r["b"]) for r in pairs.collect())
+    got = sorted((r["a"], r["b"]) for r in _within_pairs(df, "a", "b").collect())
     want = sorted(
         (a, b) for g in groups for a, b in combinations(sorted(g), 2)
     )
     assert got == want
+
+    gpairs = [([2, 8], [1, 5, 9], 0.5), ([4], [3], 0.9), ([6, 7], [11], 1.0)]
+    gp = spark.createDataFrame(
+        gpairs, "ma array<bigint>, mb array<bigint>, s double"
+    )
+    cross = _cross_pairs(gp, "ma", "mb", "a", "b", "s")
+    got = sorted(tuple(r) for r in cross.collect())
+    want = sorted(
+        (min(x, y), max(x, y), s) for ma, mb, s in gpairs for x in ma for y in mb
+    )
+    assert got == want and all(a < b for a, b, _ in got)
+
+    docs = spark.createDataFrame(
+        [(9, "x"), (2, "y"), (5, "x"), (1, "x"), (7, "y"), (3, "z")],
+        "doc_id bigint, key string",
+    )
+    got = {
+        r["key"]: (r["gid"], list(r["members"]))
+        for r in _collapse(docs, "doc_id", "key").collect()
+    }
+    assert got == {"x": (1, [1, 5, 9]), "y": (2, [2, 7]), "z": (3, [3])}
+
+    assert _within_pairs(df.limit(0), "a", "b").count() == 0
+    assert _cross_pairs(gp.limit(0), "ma", "mb", "a", "b", "s").count() == 0
+    assert _collapse(docs.limit(0), "doc_id", "key").count() == 0
 
 
 def test_cone_blocked_edges_exact_and_prunes(spark):
