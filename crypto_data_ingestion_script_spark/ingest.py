@@ -27,12 +27,12 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load
 from .functions.exact import MONEY, dsum
-from .operators.rollup import hourly_bars_table
+from .operators.rollup import BAR_COLS, ohlc_bars
 from .registry import query
 
 
@@ -46,17 +46,72 @@ def write_bronze(ticks: DataFrame, bronze_path: str) -> None:
     )
 
 
-def rollup_to_silver(spark: SparkSession, bronze_path: str, silver_path: str) -> None:
-    """Bronze → hourly OHLC bars → silver, idempotently.
+#: Silver primary key (dataCollector.py:73); ``date`` is also the partition.
+SILVER_KEY = ["date", "hour", "symbol"]
 
-    Dynamic partition overwrite: only the ``date`` partitions present in
-    this batch are replaced; PK uniqueness enforced by dropDuplicates
-    before write. Re-running the same day cannot duplicate rows — the
-    exactly-once property the reference lacks."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    ticks = spark.read.parquet(bronze_path)
-    bars = hourly_bars_table(ticks).dropDuplicates(["date", "hour", "symbol"])
-    bars.write.mode("overwrite").partitionBy("date").parquet(silver_path)
+#: DuckDB oracle shared by every query that reads back a silver table: the
+#: persisted rows must equal the direct aggregation, however they got there.
+SILVER_ORACLE = """
+    SELECT CAST(CAST(date_trunc('hour', ts) AS DATE) AS TIMESTAMP) AS date,
+           CAST(hour(ts) AS INTEGER)            AS hour,
+           event_type                           AS symbol,
+           arg_min(value, ts)                   AS open_price,
+           max(value)                           AS high_price,
+           min(value)                           AS low_price,
+           arg_max(value, ts)                   AS close_price,
+           (CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value)) AS avg_price,
+           count(*)                             AS sample_count
+    FROM events GROUP BY 1, 2, 3
+    """
+
+
+def silver_rows(
+    bars: DataFrame, hour_start: Column, symbol: Column | str
+) -> DataFrame:
+    """Hourly bars → the silver row (date, hour, symbol, O/H/L/C, avg, n);
+    ``hour_start`` is the bar's hour column, ``symbol`` its key column."""
+    return bars.select(
+        F.to_date(hour_start).alias("date"),
+        F.hour(hour_start).alias("hour"),
+        symbol,
+        *BAR_COLS,
+    )
+
+
+def hourly_bars_table(ticks: DataFrame) -> DataFrame:
+    """Silver rows straight from ticks, with the PK enforced by
+    construction (groupBy keys are unique)."""
+    return silver_rows(ohlc_bars(ticks), F.col("hour_ts"), "symbol")
+
+
+def write_silver(rows: DataFrame, silver_path: str) -> None:
+    """Idempotent silver write: PK uniqueness enforced by dropDuplicates,
+    then dynamic partition overwrite — only the ``date`` partitions present
+    in ``rows`` are replaced, so re-writing a day cannot duplicate rows
+    (the exactly-once property the reference lacks). The overwrite mode is
+    a writer option, never a conf on the caller's session."""
+    (
+        rows.dropDuplicates(SILVER_KEY)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("date")
+        .parquet(silver_path)
+    )
+
+
+def read_silver(spark: SparkSession, silver_path: str) -> DataFrame:
+    """Silver read-back in the oracle's shape (``date`` as a timestamp)."""
+    return spark.read.parquet(silver_path).select(
+        F.col("date").cast("timestamp_ntz").alias("date"),
+        "hour",
+        "symbol",
+        *BAR_COLS,
+    )
+
+
+def rollup_to_silver(spark: SparkSession, bronze_path: str, silver_path: str) -> None:
+    """Bronze → hourly OHLC bars → silver, idempotently."""
+    write_silver(hourly_bars_table(spark.read.parquet(bronze_path)), silver_path)
 
 
 def apply_retention(spark: SparkSession, bronze_path: str, keep_days: int, now_date) -> int:
@@ -108,18 +163,7 @@ def q_sink_bronze(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sink_silver",
-    oracle="""
-    SELECT CAST(CAST(date_trunc('hour', ts) AS DATE) AS TIMESTAMP) AS date,
-           CAST(hour(ts) AS INTEGER)            AS hour,
-           event_type                           AS symbol,
-           arg_min(value, ts)                   AS open_price,
-           max(value)                           AS high_price,
-           min(value)                           AS low_price,
-           arg_max(value, ts)                   AS close_price,
-           (CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value)) AS avg_price,
-           count(*)                             AS sample_count
-    FROM events GROUP BY 1, 2, 3
-    """,
+    oracle=SILVER_ORACLE,
     tags=("sink", "ingest"),
 )
 def q_sink_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -133,17 +177,7 @@ def q_sink_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_bronze(_tick_stream_from_events(t), bronze)
     rollup_to_silver(spark, bronze, silver)
     rollup_to_silver(spark, bronze, silver)  # idempotency: must not duplicate
-    return spark.read.parquet(silver).select(
-        F.col("date").cast("timestamp_ntz").alias("date"),
-        "hour",
-        "symbol",
-        "open_price",
-        "high_price",
-        "low_price",
-        "close_price",
-        "avg_price",
-        "sample_count",
-    )
+    return read_silver(spark, silver)
 
 
 def merge_upsert(
@@ -170,24 +204,14 @@ def merge_upsert(
         updates.select(*keys), keys, "left_anti"
     )
     merged = updates.select(*existing.columns).unionByName(keep)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(partition_col).parquet(target_path)
 
 
 @query(
     "q_merge_upsert",
-    oracle="""
-    SELECT CAST(CAST(date_trunc('hour', ts) AS DATE) AS TIMESTAMP) AS date,
-           CAST(hour(ts) AS INTEGER)            AS hour,
-           event_type                           AS symbol,
-           arg_min(value, ts)                   AS open_price,
-           max(value)                           AS high_price,
-           min(value)                           AS low_price,
-           arg_max(value, ts)                   AS close_price,
-           (CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value)) AS avg_price,
-           count(*)                             AS sample_count
-    FROM events GROUP BY 1, 2, 3
-    """,
+    oracle=SILVER_ORACLE,
     tags=("ingest", "merge"),
 )
 def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,19 +232,9 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     stale.write.mode("overwrite").partitionBy("date").parquet(silver)
     corrected = hourly_bars_table(ticks)
     merge_upsert(
-        spark, silver, corrected, keys=["date", "hour", "symbol"], partition_col="date"
+        spark, silver, corrected, keys=SILVER_KEY, partition_col="date"
     )
-    return spark.read.parquet(silver).select(
-        F.col("date").cast("timestamp_ntz").alias("date"),
-        "hour",
-        "symbol",
-        "open_price",
-        "high_price",
-        "low_price",
-        "close_price",
-        "avg_price",
-        "sample_count",
-    )
+    return read_silver(spark, silver)
 
 
 @query(

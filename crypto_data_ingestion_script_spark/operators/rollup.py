@@ -22,12 +22,52 @@ price (falsy test, dataCollector.py:83); we implement clean first-by-time.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions.exact import davg
 from ..registry import query
+
+
+#: Bar value columns, in output order, after the (hour, key) grouping.
+BAR_COLS = (
+    "open_price",
+    "high_price",
+    "low_price",
+    "close_price",
+    "avg_price",
+    "sample_count",
+)
+
+#: DuckDB oracle shared by every per-(hour, event_type) bar query — batch
+#: (q_ohlc_hourly), streaming (q_stream_tumbling) and RocksDB-state
+#: (q_stream_rocksdb): the engine that computes the bar must not change it.
+HOURLY_BARS_ORACLE = """
+    SELECT date_trunc('hour', ts)   AS hour_ts,
+           event_type,
+           arg_min(value, ts)       AS open_price,
+           max(value)               AS high_price,
+           min(value)               AS low_price,
+           arg_max(value, ts)       AS close_price,
+           (CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value)) AS avg_price,
+           count(*)                 AS sample_count
+    FROM events
+    GROUP BY 1, 2
+    """
+
+
+def bar_aggs(ts_col: str, value_col: str) -> list[Column]:
+    """The six bar aggregates, named ``BAR_COLS``: open/close are the
+    value at the first/last ``ts``, avg accumulates in fixed point."""
+    return [
+        F.min_by(F.col(value_col), F.col(ts_col)).alias("open_price"),
+        F.max(value_col).alias("high_price"),
+        F.min(value_col).alias("low_price"),
+        F.max_by(F.col(value_col), F.col(ts_col)).alias("close_price"),
+        davg(value_col).alias("avg_price"),
+        F.count(F.lit(1)).alias("sample_count"),
+    ]
 
 
 def ohlc_bars(
@@ -42,51 +82,14 @@ def ohlc_bars(
     map-side. At 100 TB this is the textbook plan — no collect, no state.
     """
     hour_ts = F.date_trunc("hour", F.col(ts_col)).alias("hour_ts")
-    return (
-        ticks.groupBy(hour_ts, F.col(key_col))
-        .agg(
-            F.min_by(F.col(value_col), F.col(ts_col)).alias("open_price"),
-            F.max(value_col).alias("high_price"),
-            F.min(value_col).alias("low_price"),
-            F.max_by(F.col(value_col), F.col(ts_col)).alias("close_price"),
-            davg(value_col).alias("avg_price"),
-            F.count(F.lit(1)).alias("sample_count"),
-        )
-    )
-
-
-def hourly_bars_table(ticks: DataFrame) -> DataFrame:
-    """Reference-shaped silver output: (date, hour, symbol, O/H/L/C, avg, n)
-    with the (date, hour, symbol) PK of dataCollector.py:73 enforced by
-    construction (groupBy keys are unique)."""
-    bars = ohlc_bars(ticks)
-    return bars.select(
-        F.to_date("hour_ts").alias("date"),
-        F.hour("hour_ts").alias("hour"),
-        "symbol",
-        "open_price",
-        "high_price",
-        "low_price",
-        "close_price",
-        "avg_price",
-        "sample_count",
+    return ticks.groupBy(hour_ts, F.col(key_col)).agg(
+        *bar_aggs(ts_col, value_col)
     )
 
 
 @query(
     "q_ohlc_hourly",
-    oracle="""
-    SELECT date_trunc('hour', ts)   AS hour_ts,
-           event_type,
-           arg_min(value, ts)       AS open_price,
-           max(value)               AS high_price,
-           min(value)               AS low_price,
-           arg_max(value, ts)       AS close_price,
-           (CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value)) AS avg_price,
-           count(*)                 AS sample_count
-    FROM events
-    GROUP BY 1, 2
-    """,
+    oracle=HOURLY_BARS_ORACLE,
     tags=("agg", "flagship"),
 )
 def q_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -132,18 +135,8 @@ def q_ohlc_reference_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     nz = F.when(
         F.col("value") != 0, F.struct(F.col("ts"), F.col("value"))
     )
-    return (
-        t.events.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("hour_ts"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.min_by("value", "ts").alias("open_price"),
-            F.min(nz).getField("value").alias("open_price_ref"),
-            F.max("value").alias("high_price"),
-            F.min("value").alias("low_price"),
-            F.max_by("value", "ts").alias("close_price"),
-            davg("value").alias("avg_price"),
-            F.count(F.lit(1)).alias("sample_count"),
-        )
-    )
+    open_price, *rest = bar_aggs("ts", "value")
+    return t.events.groupBy(
+        F.date_trunc("hour", F.col("ts")).alias("hour_ts"),
+        F.col("event_type"),
+    ).agg(open_price, F.min(nz).getField("value").alias("open_price_ref"), *rest)

@@ -174,7 +174,10 @@ def q_source_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same source as a custom STREAMING reader: 20 poll cycles
     (5 per micro-batch) drained to a memory sink, offset-tracked through
     a checkpoint — the reference's poll loop with exactly-once restart
-    semantics. Output equals the batch oracle at the same tick count."""
+    semantics. Output equals the batch oracle at the same tick count.
+    Like run_to_memory, it removes its checkpoint and drops the sink's
+    temp view once the result is bound."""
+    import shutil
     import uuid
 
     from ..streaming.jobs import stream_ckpt_dir
@@ -184,17 +187,23 @@ def q_source_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.format("sim_ticks").option("max_ticks", "20").load()
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", stream_ckpt_dir("ckpt_ds_"))
-        .start()
-    )
-    # Python stream sources don't support availableNow (the v2 micro-batch
-    # wrapper falls back to one batch); drain until the finite source
-    # reports no new data, then stop.
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    return spark.table(name)
+    ckpt = stream_ckpt_dir("ckpt_ds_")
+    try:
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        # Python stream sources don't support availableNow (the v2
+        # micro-batch wrapper falls back to one batch); drain until the
+        # finite source reports no new data, then stop.
+        q.processAllAvailable()
+        q.stop()
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out

@@ -24,14 +24,18 @@ Intentional semantic upgrades over the reference (SURVEY §7.4.2):
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..catalog import load
 from ..functions.exact import davg
+from ..ingest import SILVER_ORACLE, read_silver, silver_rows, write_silver
+from ..operators.rollup import BAR_COLS, HOURLY_BARS_ORACLE, bar_aggs
 from ..registry import query
 
 EVENTS_DDL = (
@@ -77,20 +81,13 @@ def _stream_events_from(
     TIMESTAMP (LTZ) column whatever the file's physical encoding. Watermarks
     require LTZ; the session TZ is pinned UTC, so wall clock matches the NTZ
     batch path exactly (catalog._NANO_TS_COLS handles the batch side)."""
-    dtype = _events_raw_ts_dtype(spark, probe_path)
-    if dtype == "bigint":
+    nanos = _events_raw_ts_dtype(spark, probe_path) == "bigint"
+    ddl = EVENTS_DDL.replace("ts timestamp_ntz", "ts bigint") if nanos else EVENTS_DDL
+    stream = spark.readStream.schema(ddl).options(**options).parquet(directory)
+    if nanos:
         # TIMESTAMP(NANOS) read as nano-longs: truncate ns → us like DuckDB.
-        ddl = EVENTS_DDL.replace("ts timestamp_ntz", "ts bigint")
-        reader = spark.readStream.schema(ddl)
-        for k, v in options.items():
-            reader = reader.option(k, v)
-        stream = reader.parquet(directory)
         return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Native TIMESTAMP(MICROS): read as NTZ (matching the file), cast to LTZ.
-    reader = spark.readStream.schema(EVENTS_DDL)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    stream = reader.parquet(directory)
     return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
@@ -117,18 +114,20 @@ def tumbling_ohlc_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(
-            F.min_by("value", "ts").alias("open_price"),
-            F.max("value").alias("high_price"),
-            F.min("value").alias("low_price"),
-            F.max_by("value", "ts").alias("close_price"),
-            davg("value").alias("avg_price"),
-            F.count(F.lit(1)).alias("sample_count"),
-        )
+        .agg(*bar_aggs("ts", "value"))
     )
 
 
-#: Per-batch engine progress of the LAST run_to_memory-driven query
+def _hour_bars(out: DataFrame) -> DataFrame:
+    """A tumbling_ohlc_stream result in the batch bar shape (q_ohlc_hourly)."""
+    return out.select(
+        F.col("w.start").cast("timestamp_ntz").alias("hour_ts"),
+        "event_type",
+        *BAR_COLS,
+    )
+
+
+#: Per-batch engine progress of the LAST availableNow-driven query
 #: (list of StreamingQueryProgress dicts). Observability hook only — the
 #: fixed-cost decomposition script (scripts/stream_decomp.py) reads the
 #: engine's own durationMs / stateOperators breakdown from here; no query
@@ -136,47 +135,46 @@ def tumbling_ohlc_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
 LAST_QUERY_PROGRESS: list = []
 
 
-def run_to_memory(agg: DataFrame, output_mode: str = "complete") -> DataFrame:
-    """Drive a streaming aggregation to completion with an availableNow
-    trigger into a memory sink; returns the materialized result. The
-    checkpoint makes restarts exactly-once — the reference's restart
-    duplicate-key hazard (dataCollector.py:146-150) is structurally gone."""
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    ckpt = stream_ckpt_dir()
-    q = (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+def _run_available(writer: DataStreamWriter) -> None:
+    """Drive a configured stream writer to completion: fresh harness
+    checkpoint, availableNow trigger, progress kept in
+    ``LAST_QUERY_PROGRESS``. The checkpoint makes restarts exactly-once —
+    the reference's restart duplicate-key hazard (dataCollector.py:146-150)
+    is structurally gone — but once the query has terminated it is dead
+    weight (in RAM when /dev/shm backed), so it is removed either way."""
     global LAST_QUERY_PROGRESS
-    LAST_QUERY_PROGRESS = [p.json for p in q.recentProgress]
-    # The memory sink holds the result; the terminated query's checkpoint
-    # is dead weight (and lives in RAM when /dev/shm backed) — drop it.
-    import shutil
+    ckpt = stream_ckpt_dir()
+    try:
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        LAST_QUERY_PROGRESS = [p.json for p in q.recentProgress]
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
-    shutil.rmtree(ckpt, ignore_errors=True)
+
+def run_to_memory(agg: DataFrame, output_mode: str = "complete") -> DataFrame:
+    """Drive a streaming query to completion into a memory sink; returns
+    the materialized result. Leaves nothing behind in the session: the
+    checkpoint is removed and the sink's temp view is dropped once the
+    result DataFrame is bound (the DataFrame keeps the sink's rows alive
+    only as long as the caller holds it)."""
+    name = f"stream_out_{uuid.uuid4().hex[:8]}"
+    _run_available(
+        agg.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    )
     spark = agg.sparkSession
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @query(
     "q_stream_tumbling",
-    oracle="""
-    SELECT date_trunc('hour', ts)   AS hour_ts,
-           event_type,
-           arg_min(value, ts)       AS open_price,
-           max(value)               AS high_price,
-           min(value)               AS low_price,
-           arg_max(value, ts)       AS close_price,
-           (CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value)) AS avg_price,
-           count(*)                 AS sample_count
-    FROM events
-    GROUP BY 1, 2
-    """,
+    oracle=HOURLY_BARS_ORACLE,
     tags=("streaming",),
 )
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,17 +183,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagship — the strongest form of the reference's core-loop parity."""
     load(spark, sf_dir)
     agg = tumbling_ohlc_stream(_events_stream(spark, sf_dir))
-    out = run_to_memory(agg, output_mode="complete")
-    return out.select(
-        F.col("w.start").cast("timestamp_ntz").alias("hour_ts"),
-        "event_type",
-        "open_price",
-        "high_price",
-        "low_price",
-        "close_price",
-        "avg_price",
-        "sample_count",
-    )
+    return _hour_bars(run_to_memory(agg, output_mode="complete"))
 
 
 @query(
@@ -301,59 +289,27 @@ def sessionized_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def stream_to_silver(
-    agg: DataFrame, silver_path: str, checkpoint: str
-) -> "object":
+def stream_to_silver(agg: DataFrame, silver_path: str) -> DataStreamWriter:
     """Production sink shape: windowed aggregation → ``foreachBatch`` →
-    idempotent partitioned silver write. Each micro-batch rewrites only the
-    date partitions it touches (dynamic partition overwrite) and dedups on
+    idempotent partitioned silver write (``ingest.write_silver``). Each
+    micro-batch rewrites only the date partitions it touches and dedups on
     the bar PK, so a replayed batch after a crash cannot duplicate rows —
     checkpoint + idempotent writer = effectively-once at rest, the property
-    the reference's plain INSERT lacks (dataCollector.py:146-150 vs :73)."""
+    the reference's plain INSERT lacks (dataCollector.py:146-150 vs :73).
+    The caller picks the checkpoint and trigger."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            batch_df.select(
-                F.to_date(F.col("w.start")).alias("date"),
-                F.hour(F.col("w.start")).alias("hour"),
-                F.col("event_type").alias("symbol"),
-                "open_price",
-                "high_price",
-                "low_price",
-                "close_price",
-                "avg_price",
-                "sample_count",
-            )
-            .dropDuplicates(["date", "hour", "symbol"])
-            .write.mode("overwrite")
-            .partitionBy("date")
-            .parquet(silver_path)
+        rows = silver_rows(
+            batch_df, F.col("w.start"), F.col("event_type").alias("symbol")
         )
+        write_silver(rows, silver_path)
 
-    return (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return agg.writeStream.outputMode("complete").foreachBatch(write_batch)
 
 
 @query(
     "q_stream_silver",
-    oracle="""
-    SELECT CAST(CAST(date_trunc('hour', ts) AS DATE) AS TIMESTAMP) AS date,
-           CAST(hour(ts) AS INTEGER)            AS hour,
-           event_type                           AS symbol,
-           arg_min(value, ts)                   AS open_price,
-           max(value)                           AS high_price,
-           min(value)                           AS low_price,
-           arg_max(value, ts)                   AS close_price,
-           (CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value)) AS avg_price,
-           count(*)                             AS sample_count
-    FROM events GROUP BY 1, 2, 3
-    """,
+    oracle=SILVER_ORACLE,
     tags=("streaming", "sink"),
 )
 def q_stream_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -361,25 +317,12 @@ def q_stream_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-source stream → event-time tumbling OHLC → foreachBatch idempotent
     silver write → read back. Hash-checked against the direct batch oracle:
     streaming + persistence must be value-invisible."""
-    import tempfile
-
     load(spark, sf_dir)
     base = tempfile.mkdtemp(prefix="stream_silver_")
     silver = os.path.join(base, "hourly_bars")
     agg = tumbling_ohlc_stream(_events_stream(spark, sf_dir))
-    q = stream_to_silver(agg, silver, stream_ckpt_dir()).start()
-    q.awaitTermination()
-    return spark.read.parquet(silver).select(
-        F.col("date").cast("timestamp_ntz").alias("date"),
-        "hour",
-        "symbol",
-        "open_price",
-        "high_price",
-        "low_price",
-        "close_price",
-        "avg_price",
-        "sample_count",
-    )
+    _run_available(stream_to_silver(agg, silver))
+    return read_silver(spark, silver)
 
 
 @query(
@@ -452,21 +395,16 @@ ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
+#: Session confs q_stream_rocksdb sets for its run and restores after.
+ROCKSDB_CONFS = {
+    "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+}
+
 
 @query(
     "q_stream_rocksdb",
-    oracle="""
-    SELECT date_trunc('hour', ts)   AS hour_ts,
-           event_type,
-           arg_min(value, ts)       AS open_price,
-           max(value)               AS high_price,
-           min(value)               AS low_price,
-           arg_max(value, ts)       AS close_price,
-           (CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value)) AS avg_price,
-           count(*)                 AS sample_count
-    FROM events
-    GROUP BY 1, 2
-    """,
+    oracle=HOURLY_BARS_ORACLE,
     tags=("streaming", "statestore"),
 )
 def q_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -477,34 +415,19 @@ def q_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     job would run it: per-batch deltas to the checkpoint, full SST uploads
     only at maintenance intervals."""
     load(spark, sf_dir)
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    changelog_key = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, ROCKSDB_PROVIDER)
-    spark.conf.set(changelog_key, "true")
+    prev = {k: spark.conf.get(k, None) for k in ROCKSDB_CONFS}
+    for k, v in ROCKSDB_CONFS.items():
+        spark.conf.set(k, v)
     try:
         agg = tumbling_ohlc_stream(_events_stream(spark, sf_dir))
         out = run_to_memory(agg, output_mode="complete")
-        # Materialize while the provider conf is active (memory sink is
-        # already complete at awaitTermination; this is belt-and-braces).
-        out.count()
     finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
-    return out.select(
-        F.col("w.start").cast("timestamp_ntz").alias("hour_ts"),
-        "event_type",
-        "open_price",
-        "high_price",
-        "low_price",
-        "close_price",
-        "avg_price",
-        "sample_count",
-    )
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    return _hour_bars(out)
 
 
 @query(
@@ -523,10 +446,6 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark horizon, not the key universe — the difference between
     O(recent) and O(forever) state at 100 TB/day. Oracle: the batch
     distinct, i.e. the original table."""
-    import os
-    import shutil
-    import tempfile
-
     t = load(spark, sf_dir)
     indir = tempfile.mkdtemp(prefix="dedup_wm_")
     src = os.path.join(sf_dir, "events.parquet")
@@ -637,7 +556,6 @@ def stream_incremental_dedup(stream: DataFrame, corpus: DataFrame) -> DataFrame:
 
     spark = corpus.sparkSession
     outdir = tempfile.mkdtemp(prefix="stream_inc_dedup_")
-    ckpt = stream_ckpt_dir()
 
     def screen_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -646,15 +564,7 @@ def stream_incremental_dedup(stream: DataFrame, corpus: DataFrame) -> DataFrame:
             outdir
         )
 
-    q = (
-        stream.writeStream.foreachBatch(screen_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    global LAST_QUERY_PROGRESS
-    LAST_QUERY_PROGRESS = [p.json for p in q.recentProgress]
+    _run_available(stream.writeStream.foreachBatch(screen_batch))
     return spark.read.parquet(outdir)
 
 

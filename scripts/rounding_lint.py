@@ -139,7 +139,7 @@ WHITELIST: dict = {
 #: round(.,8) invariance detector cannot fire at money magnitude and a
 #: regression dropping the cast would otherwise ride the stale whitelist.
 PLAN_CHECK_EXEMPT: dict = {
-    "q_merge_upsert": "returned plan is the Derby JDBC read-back; the "
+    "q_merge_upsert": "returned plan is the silver parquet re-read; the "
     "decimal cast runs in the upstream MERGE build job",
     "q_sink_silver": "returned plan is the silver parquet re-read; the "
     "cast runs in the sink write job",

@@ -5,6 +5,9 @@ silently skew results."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 
 from crypto_data_ingestion_script_spark.catalog import load
@@ -77,3 +80,55 @@ def test_corrupt_file_quarantine_via_ignore_corrupt(spark, sf_dir):
         spark.conf.set("spark.sql.files.ignoreCorruptFiles", prev)
         shutil.rmtree(lake, ignore_errors=True)
     assert survived == n_good, (survived, n_good)
+
+
+#: Session confs a query may set for its own run but must not leave behind,
+#: pinned to their Spark defaults so a leak shows whatever ran before.
+_PINNED_CONFS = {
+    "spark.sql.sources.partitionOverwriteMode": "STATIC",
+    "spark.sql.streaming.stateStore.providerClass": "org.apache.spark.sql."
+    "execution.streaming.state.HDFSBackedStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "false",
+}
+
+
+def _ckpt_dirs() -> set:
+    roots = {tempfile.gettempdir(), "/dev/shm"}
+    return {
+        os.path.join(root, d)
+        for root in roots
+        if os.path.isdir(root)
+        for d in os.listdir(root)
+        if d.startswith("ckpt_")
+    }
+
+
+def _temp_views(spark) -> set:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_stream_tumbling",
+        "q_stream_silver",
+        "q_stream_rocksdb",
+        "q_sink_silver",
+        "q_merge_upsert",
+        "q_stream_incremental_dedup",
+        "q_source_datasource_stream",
+    ],
+)
+def test_repeated_calls_leave_no_session_residue(spark, sf_dir, name):
+    """A long-lived caller-owned session runs each query many times: a
+    query may not leave temp views (a memory sink's view pins its rows),
+    streaming checkpoint dirs, or session confs behind."""
+    fn = load_all()[name].fn
+    for k, v in _PINNED_CONFS.items():
+        spark.conf.set(k, v)
+    views, ckpts = _temp_views(spark), _ckpt_dirs()
+    for _ in range(2):
+        assert fn(spark, sf_dir).count() > 0
+    assert _temp_views(spark) == views
+    assert _ckpt_dirs() - ckpts == set()
+    assert {k: spark.conf.get(k) for k in _PINNED_CONFS} == _PINNED_CONFS

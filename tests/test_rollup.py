@@ -8,10 +8,8 @@ import datetime as dt
 
 import pytest
 
-from crypto_data_ingestion_script_spark.operators.rollup import (
-    hourly_bars_table,
-    ohlc_bars,
-)
+from crypto_data_ingestion_script_spark.ingest import hourly_bars_table
+from crypto_data_ingestion_script_spark.operators.rollup import ohlc_bars
 from crypto_data_ingestion_script_spark.schemas import TICKS
 
 
