@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import query
+from .similarity import cosine_pairs, cosine_sql, fetch_probes
 
 def _tokens():
     return F.split(F.col("text"), " ")
@@ -628,23 +629,12 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_embedding",
-    oracle="""
+    oracle=f"""
     WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
                WHERE vec_id < 25),
     scored AS (
       SELECT q.q_id, e.vec_id AS nn_id,
-             list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-               list_transform(range(1, 65),
-                 i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))),
-               (acc, x) -> acc + x)
-             / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                  list_transform(range(1, 65),
-                    i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE))),
-                  (acc, x) -> acc + x))
-                * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                  list_transform(range(1, 65),
-                    i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))),
-                  (acc, x) -> acc + x))) AS cos_sim
+             {cosine_sql('q.q_emb', 'e.embedding')} AS cos_sim
       FROM q CROSS JOIN embeddings e
       WHERE e.vec_id <> q.q_id
     )
@@ -667,38 +657,10 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact rerank of candidates only — same output contract, sublinear
     search; the exact scan here is also the recall ground truth that path
     is measured against (tests/test_ann_recall.py)."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
     t = load(spark, sf_dir)
-    qrows = (
-        t.embeddings.filter(F.col("vec_id") < 25)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype="int64")
-    Q = np.array([r["embedding"] for r in qrows], dtype="float64")
-    q_norms = np.sqrt((Q * Q).sum(axis=1))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            E = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            sims = (E @ Q.T) / (
-                np.sqrt((E * E).sum(axis=1))[:, None] * q_norms[None, :]
-            )
-            n, k = sims.shape
-            out = pd.DataFrame(
-                {
-                    "q_id": np.tile(q_ids, n),
-                    "nn_id": np.repeat(pdf["vec_id"].to_numpy(), k),
-                    "cos_sim": sims.ravel(),
-                }
-            )
-            yield out[out["q_id"] != out["nn_id"]]
-
-    scored = t.embeddings.mapInPandas(
-        score, schema="q_id bigint, nn_id bigint, cos_sim double"
+    q_ids, Q, _ = fetch_probes(sf_dir, t.embeddings, {"vec_id": 25})
+    scored = cosine_pairs(t.embeddings, q_ids, Q).select(
+        "q_id", F.col("cand_id").alias("nn_id"), "cos_sim"
     )
     from pyspark.sql import Window
 

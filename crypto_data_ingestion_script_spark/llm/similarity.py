@@ -1,11 +1,27 @@
 """Similarity search over embeddings (SURVEY §2.L): brute-force cosine
-top-k as the exact baseline, and a hyperplane-LSH bucketed variant as the
-scale path.
+top-k as the exact baseline, and hyperplane-LSH / IVF candidate scans as
+the scale paths.
 
-Embedding arithmetic stays JVM-side via higher-order array lambdas
+Embedding arithmetic in the JVM uses higher-order array lambdas
 (zip_with-free indexless fold): float32 inputs are widened to double first,
 so products and the sequential sum are bit-identical to the DuckDB oracle's
 left-fold — the cosine values hash-match exactly, not approximately.
+
+The probe-vs-corpus queries (q_cosine_topk, q_ann_lsh, q_ann_ivf,
+q_knn_classify, q_crosslingual_mine and llm/dedup.py's q_dedup_embedding)
+share one numpy scan instead:
+
+- `fetch_probes`: the driver-side probe fetch (pyarrow, Spark fallback)
+  returning ids, a (p, 64) float64 matrix and any extra columns — a
+  (0, 64) matrix when no probe row exists;
+- `_batch_cosines`: the one per-batch kernel, an (n, p) cosine matrix;
+- `cosine_pairs`: the exact all-pairs scan, emitting every (probe,
+  candidate, cosine) row EXCEPT self-matches (q_id == cand_id); callers
+  filter the corpus first and rename the columns they need;
+- `_ann_scan`: the candidate-mask scan behind both ANN queries, which
+  masks self-matches out of the candidate set and the exact top-5 alike.
+
+`cosine_sql` is the matching unrounded DuckDB cosine for the oracles.
 """
 
 from __future__ import annotations
@@ -52,6 +68,112 @@ _DOT_SQL = """list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
       (acc, x) -> acc + x)"""
 
 
+def cosine_sql(a: str, b: str) -> str:
+    """Unrounded DuckDB cosine of two 64-d embedding lists, built from
+    `_DOT_SQL`; oracles round it themselves where their output is rounded."""
+    return (
+        f"{_DOT_SQL.format(a=a, b=b)} / (sqrt({_DOT_SQL.format(a=a, b=a)})"
+        f" * sqrt({_DOT_SQL.format(a=b, b=b)}))"
+    )
+
+
+#: Embedding width of the `embeddings` table (the oracles fold range(1, 65)).
+EMB_DIM = 64
+
+
+def _emb_matrix(vectors):
+    """(n, EMB_DIM) float64 matrix from a sequence of embedding arrays
+    (float32→float64 widening is exact), and (0, EMB_DIM) when empty, so
+    zero-row inputs flow through the matmuls instead of crashing np.stack."""
+    import numpy as np
+
+    if len(vectors) == 0:
+        return np.empty((0, EMB_DIM))
+    return np.stack(vectors).astype("float64")
+
+
+def _batch_cosines(E, Q):
+    """(n, p) cosine matrix of an (n, d) batch against the (p, d) probe
+    matrix: one normalized numpy matmul."""
+    import numpy as np
+
+    return (E @ Q.T) / (
+        np.sqrt((E * E).sum(axis=1))[:, None]
+        * np.sqrt((Q * Q).sum(axis=1))[None, :]
+    )
+
+
+def fetch_probes(sf_dir: str, embeddings: DataFrame, below: dict,
+                 extra: tuple = ()):
+    """Driver-side fetch of the probe rows (``col < bound`` for every
+    entry of ``below``), sorted by vec_id. Returns (ids, (p, EMB_DIM)
+    float64 matrix, {col: array} for the ``extra`` columns).
+
+    Metadata-scale work that does not warrant a Spark job when the table
+    is a plain local file. Fast path: a direct pyarrow read with the
+    predicate pushed into it (row-group pruning + row-level filter), so
+    the driver never materializes the corpus; float32→float64 widening is
+    exact, so values match a collect() bit-for-bit. When ``sf_dir`` is a
+    non-local URI (s3://, hdfs://) or a layout pyarrow can't resolve the
+    same way, falls back to collecting the probe rows through Spark's own
+    filesystem layer — identical values either way."""
+    import os
+
+    cols = ["vec_id", "embedding", *extra]
+    pdf = None
+    if os.path.isdir(sf_dir):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        try:
+            pdf = pq.read_table(
+                os.path.join(sf_dir, "embeddings.parquet"),
+                columns=cols,
+                filters=[(c, "<", v) for c, v in below.items()],
+            ).to_pandas()
+        except (OSError, pa.ArrowException):
+            pdf = None  # fall through to the Spark path
+    if pdf is None:
+        cond = F.lit(True)
+        for c, v in below.items():
+            cond = cond & (F.col(c) < v)
+        pdf = embeddings.filter(cond).select(*cols).toPandas()
+    pdf = pdf.sort_values("vec_id")
+    ids = pdf["vec_id"].to_numpy(dtype="int64")
+    extras = {c: pdf[c].to_numpy() for c in extra}
+    return ids, _emb_matrix(pdf["embedding"].to_numpy()), extras
+
+
+def cosine_pairs(corpus: DataFrame, q_ids, Q) -> DataFrame:
+    """Exact all-pairs scan: the (p, d) probe matrix ships to every
+    executor inside a ``mapInPandas`` closure (the broadcast-dim pattern)
+    and each Arrow batch of ``corpus`` scores against ALL probes in one
+    `_batch_cosines` matmul — one scan of the big side, no shuffle of it.
+    Emits (q_id, cand_id, cand_label, cos_sim) for every pair except
+    self-matches; cos_sim is unrounded."""
+    import numpy as np
+    import pandas as pd
+    from collections.abc import Iterator
+
+    def pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            sims = _batch_cosines(_emb_matrix(pdf["embedding"].to_numpy()), Q)
+            n, p = sims.shape
+            out = pd.DataFrame(
+                {
+                    "q_id": np.tile(q_ids, n),
+                    "cand_id": np.repeat(pdf["vec_id"].to_numpy(), p),
+                    "cand_label": np.repeat(pdf["label"].to_numpy(), p),
+                    "cos_sim": sims.ravel(),
+                }
+            )
+            yield out[out["q_id"] != out["cand_id"]]
+
+    return corpus.mapInPandas(
+        pairs, schema="q_id bigint, cand_id bigint, cand_label int, cos_sim double"
+    )
+
+
 @query(
     "q_cosine_topk",
     oracle=f"""
@@ -59,10 +181,7 @@ _DOT_SQL = """list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
                WHERE vec_id < 5),
     scored AS (
       SELECT q.q_id, e.vec_id AS cand_id, e.label AS cand_label,
-             round({_DOT_SQL.format(a='q.q_emb', b='e.embedding')}
-             / (sqrt({_DOT_SQL.format(a='q.q_emb', b='q.q_emb')})
-                * sqrt({_DOT_SQL.format(a='e.embedding', b='e.embedding')})), 8)
-               AS cos_sim
+             round({cosine_sql('q.q_emb', 'e.embedding')}, 8) AS cos_sim
       FROM q CROSS JOIN embeddings e
       WHERE e.vec_id <> q.q_id
     )
@@ -76,52 +195,23 @@ _DOT_SQL = """list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
     tags=("llm", "similarity"),
 )
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 for 5 query vectors, Arrow-vectorized: the
-    tiny query matrix ships to every executor inside a ``mapInPandas``
-    closure (the broadcast-dim pattern); each
-    Arrow batch of the corpus scores against ALL queries in one numpy
-    matmul. One scan of the big side, no shuffle of it; only the
-    (n_queries x n_candidates) scored rows hit the ranking shuffle.
+    """Brute-force cosine top-5 for 5 query vectors: the 5-row probe
+    matrix is fetched driver-side (`fetch_probes` — spinning up a Spark
+    job to move 5 rows costs more than the read) and the corpus is
+    scanned once, Arrow-vectorized (`cosine_pairs`), with no shuffle of
+    it; only the (n_queries x n_candidates) scored rows hit the ranking
+    shuffle.
 
     Per-batch numpy replaces a per-pair interpreted higher-order fold —
     the same semantics at ~100x the throughput on dense vectors; the
     round-to-8 output absorbs summation-order float drift vs the oracle's
     sequential fold. This is the exact baseline; q_ann_lsh is the
-    sublinear path.
-
-    The 5-row probe matrix is fetched with a driver-side pyarrow read
-    (metadata-scale work — spinning up a Spark job to move 5 rows costs
-    more than the read); float32→float64 widening is exact, so the values
-    are bit-identical to a collect(). The corpus scan stays distributed."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
+    sublinear path."""
     t = load(spark, sf_dir)
-    q_ids, Q = _probe_matrix(sf_dir, probe_limit=5, embeddings=t.embeddings)
-    q_norms = np.sqrt((Q * Q).sum(axis=1))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            E = np.stack(pdf["embedding"].to_numpy()).astype("float64")  # (n, d)
-            sims = (E @ Q.T) / (
-                np.sqrt((E * E).sum(axis=1))[:, None] * q_norms[None, :]
-            )  # (n, k)
-            n, k = sims.shape
-            cand_ids = pdf["vec_id"].to_numpy()
-            out = pd.DataFrame(
-                {
-                    "q_id": np.tile(q_ids, n),
-                    "cand_id": np.repeat(cand_ids, k),
-                    "cand_label": np.repeat(pdf["label"].to_numpy(), k),
-                    "cos_sim": sims.ravel(),
-                }
-            )
-            yield out[out["q_id"] != out["cand_id"]]
-
-    scored = t.embeddings.mapInPandas(
-        score, schema="q_id bigint, cand_id bigint, cand_label int, cos_sim double"
-    ).withColumn("cos_sim", F.round("cos_sim", 8))
+    q_ids, Q, _ = fetch_probes(sf_dir, t.embeddings, {"vec_id": 5})
+    scored = cosine_pairs(t.embeddings, q_ids, Q).withColumn(
+        "cos_sim", F.round("cos_sim", 8)
+    )
     # Rank on the ROUNDED similarity (the declared output precision), ties
     # by cand_id — the same order the oracle uses, so duplicate embeddings
     # whose BLAS-batched sims differ only in trailing ulps cannot flip the
@@ -212,53 +302,6 @@ def hyperplane_buckets(emb_col, n_planes: int = 8, dim: int = 64):
     ).alias("bucket")
 
 
-def _probe_matrix(sf_dir: str, probe_limit: int, embeddings: DataFrame | None = None):
-    """Driver-side fetch of the probe vectors (vec_id < probe_limit) as
-    (ids, float64 matrix) — metadata-scale work that does not warrant a
-    Spark job when the table is a plain local file. Fast path: direct
-    pyarrow read (float32→float64 widening is exact, so values match a
-    collect() bit-for-bit). When ``sf_dir`` is a non-local URI (s3://,
-    hdfs://) or a multi-file layout pyarrow can't resolve the same way,
-    falls back to collecting the probe rows through Spark's own filesystem
-    layer — identical values either way."""
-    import os
-
-    import numpy as np
-
-    pdf = None
-    if os.path.isdir(sf_dir):
-        try:
-            import pyarrow.parquet as pq
-
-            # Predicate pushed into the parquet read (row-group pruning +
-            # row-level filter) so the driver never materializes the full
-            # corpus — the probe fetch is O(probe_limit) in memory, not
-            # O(corpus), matching the Spark fallback's pushed filter.
-            tbl = pq.read_table(
-                os.path.join(sf_dir, "embeddings.parquet"),
-                columns=["vec_id", "embedding"],
-                filters=[("vec_id", "<", probe_limit)],
-            )
-            pdf = tbl.to_pandas()
-        except Exception:
-            pdf = None  # fall through to the Spark path
-    if pdf is None:
-        if embeddings is None:
-            raise ValueError(
-                f"probe fetch: {sf_dir!r} is not a local directory and no "
-                "embeddings DataFrame was provided for the Spark fallback"
-            )
-        pdf = (
-            embeddings.select("vec_id", "embedding")
-            .filter(F.col("vec_id") < probe_limit)
-            .toPandas()
-        )
-    pdf = pdf[pdf["vec_id"] < probe_limit].sort_values("vec_id")
-    q_ids = pdf["vec_id"].to_numpy(dtype="int64")
-    Q = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-    return q_ids, Q
-
-
 def _topk_partial(sims, ids, k: int):
     """Within-batch exact top-k row indices per probe column, with the
     GLOBAL tie-break (cos_sim desc, cand_id asc) — the same order the
@@ -308,15 +351,92 @@ def _ann_verdict(exact_scored: DataFrame, cand: DataFrame, verdict_col: str
     )
 
 
+
+def _ann_scan(embeddings: DataFrame, q_ids, Q, candidates, verdict_col: str
+              ) -> DataFrame:
+    """The one corpus scan behind both ANN queries. ``candidates(E)``
+    returns the (n, p) candidate mask of one Arrow batch against the
+    probes — an LSH signature match or an IVF cell match. Per batch it
+    emits the candidate (probe, vector) pairs (kind 0) and, from the same
+    batch's `_batch_cosines`, each probe's within-batch exact top-5
+    partials (kind 1): the global top-5 is a subset of the union of batch
+    top-5s, so the exact side stays exact, and `_topk_partial` carries the
+    global (sim desc, cand_id) tie-break so k-boundary ties are
+    batch-boundary-proof. Self-matches are masked out of both. A vector
+    lives in exactly one batch, so a pair is emitted once; downstream is
+    probe-scale only (`_ann_verdict`)."""
+    import numpy as np
+    import pandas as pd
+    from collections.abc import Iterator
+
+    from ..partitioning import ensure_parallelism
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            E = _emb_matrix(pdf["embedding"].to_numpy())
+            ids = pdf["vec_id"].to_numpy()
+            self_match = ids[:, None] == q_ids[None, :]
+            ci, cj = np.nonzero(candidates(E) & ~self_match)
+            # Round to the declared 8-digit output precision BEFORE the
+            # top-k selection: BLAS-batched matmuls give ulp-different
+            # values for bit-identical vectors depending on batch shape,
+            # so only the rounded value is batch-invariant — the ranking
+            # contract is (round(cos,8) desc, cand_id), oracle-matched.
+            # Rounding mode: np.round is half-to-even while the DuckDB
+            # oracle and F.round are half-away-from-zero; a cosine
+            # landing EXACTLY on a decimal half at the 8th digit would
+            # rank differently, but float-computed cosines hit exact
+            # decimal halves with probability ~0 (measure-zero set), so
+            # the modes are interchangeable here in practice.
+            sims = np.round(_batch_cosines(E, Q), 8)
+            sims[self_match] = -2.0
+            k = min(5, len(ids))
+            top = _topk_partial(sims, ids, k)  # (k, p) row indices
+            yield pd.DataFrame(
+                {
+                    "kind": np.concatenate(
+                        [
+                            np.zeros(len(ci), dtype="int32"),
+                            np.ones(k * len(q_ids), dtype="int32"),
+                        ]
+                    ),
+                    "q_id": np.concatenate([q_ids[cj], np.repeat(q_ids, k)]),
+                    "cand_id": np.concatenate(
+                        [ids[ci], ids[top].ravel(order="F")]
+                    ),
+                    "sim": np.concatenate(
+                        [
+                            np.zeros(len(ci)),
+                            sims[top, np.arange(len(q_ids))[None, :]].ravel(
+                                order="F"
+                            ),
+                        ]
+                    ),
+                }
+            )
+
+    rows = (
+        ensure_parallelism(embeddings, bytes_per_task=ANN_SCAN_BYTES_PER_TASK)
+        .select("vec_id", "embedding")
+        .mapInPandas(
+            scan, schema="kind int, q_id bigint, cand_id bigint, sim double"
+        )
+        .localCheckpoint()  # probe-scale rows; consumed twice below
+    )
+    cand = rows.filter(F.col("kind") == 0).select("q_id", "cand_id")
+    exact = rows.filter(F.col("kind") == 1).select(
+        "q_id", "cand_id", F.col("sim").alias("cos_sim")
+    )
+    return _ann_verdict(exact, cand, verdict_col)
+
 _ANN_ORACLE = f"""
     WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
                WHERE vec_id < 5),
     scored AS (
       SELECT q.q_id, e.vec_id AS cand_id,
-             round({_DOT_SQL.format(a='q.q_emb', b='e.embedding')}
-             / (sqrt({_DOT_SQL.format(a='q.q_emb', b='q.q_emb')})
-                * sqrt({_DOT_SQL.format(a='e.embedding', b='e.embedding')})), 8)
-               AS cos_sim
+             round({cosine_sql('q.q_emb', 'e.embedding')}, 8) AS cos_sim
       FROM q CROSS JOIN embeddings e
       WHERE e.vec_id <> q.q_id
     )
@@ -352,19 +472,11 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
       collisions). The 5×8 probe signature matrix ships in the scan
       closure — probe-scale state, the same contract as the probe
       matrix itself.
-    - Each Arrow batch computes corpus signatures with one matmul and
-      matches them against the probe signatures IN NUMPY (any-table
-      match), emitting only the actual candidate pairs — no corpus-wide
-      signature table, no bucket join, no distinct (a vector lives in
-      exactly one batch, so a pair is emitted once). The same batch's
-      normalized matmul (q_cosine_topk's kernel) emits each probe's
-      within-batch exact top-5 partials; the global top-5 is a subset of
-      the union of batch top-5s, so the exact side stays exact — the
-      partials carry the global (sim desc, cand_id) tie-break
-      (`_topk_partial`) so duplicate embeddings at the k-boundary cannot
-      make the survivor depend on Arrow batch boundaries.
-    - Downstream is probe-scale only: a window over the exact partials
-      and a broadcast-sized join with the candidate pairs.
+    - Each Arrow batch of the shared ANN scan (`_ann_scan`) computes
+      corpus signatures with one matmul and matches them against the
+      probe signatures IN NUMPY (any-table match) — no corpus-wide
+      signature table, no bucket join, no distinct. The same batch
+      yields the exact top-5 partials.
 
     At a bucketed-ANN deployment scale the per-batch probe match is the
     map side of the bucket equi-join this query previously spelled out;
@@ -377,87 +489,22 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     must surface in the LSH candidate set (measured ≥0.4 at both test
     scales; bound 0.2)."""
     import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    from ..partitioning import ensure_parallelism
 
     t = load(spark, sf_dir)
     n_tables, bits = 8, 4
     P = _plane_matrix(spark, n_tables * bits, 64)
     pack = 2 ** np.arange(bits - 1, -1, -1)
-    q_ids, Q = _probe_matrix(sf_dir, 5, embeddings=t.embeddings)
-    q_norms = np.sqrt((Q * Q).sum(axis=1))
-    QS = (Q @ P.T >= 0).reshape(len(q_ids), n_tables, bits) @ pack  # (p, 8)
+    q_ids, Q, _ = fetch_probes(sf_dir, t.embeddings, {"vec_id": 5})
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            ids = pdf["vec_id"].to_numpy()
-            n = len(ids)
-            sigs = (E @ P.T >= 0).reshape(n, n_tables, bits) @ pack
-            # any-table signature match against every probe: (n, p)
-            hit = (sigs[:, None, :] == QS[None, :, :]).any(axis=2)
-            hit &= ids[:, None] != q_ids[None, :]
-            ci, cj = np.nonzero(hit)
-            sims = (E @ Q.T) / (
-                np.sqrt((E * E).sum(axis=1))[:, None] * q_norms[None, :]
-            )
-            # Round to the declared 8-digit output precision BEFORE the
-            # top-k selection: BLAS-batched matmuls give ulp-different
-            # values for bit-identical vectors depending on batch shape,
-            # so only the rounded value is batch-invariant — the ranking
-            # contract is (round(cos,8) desc, cand_id), oracle-matched.
-            # Rounding mode: np.round is half-to-even while the DuckDB
-            # oracle and F.round are half-away-from-zero; a cosine
-            # landing EXACTLY on a decimal half at the 8th digit would
-            # rank differently, but float-computed cosines hit exact
-            # decimal halves with probability ~0 (measure-zero set), so
-            # the modes are interchangeable here in practice.
-            sims = np.round(sims, 8)
-            sims[ids[:, None] == q_ids[None, :]] = -2.0  # mask self-match
-            k = min(5, n)
-            top = _topk_partial(sims, ids, k)  # (k, p) row indices
-            yield pd.DataFrame(
-                {
-                    "kind": np.concatenate(
-                        [
-                            np.zeros(len(ci), dtype="int32"),
-                            np.ones(k * len(q_ids), dtype="int32"),
-                        ]
-                    ),
-                    "q_id": np.concatenate(
-                        [q_ids[cj], np.repeat(q_ids, k)]
-                    ),
-                    "cand_id": np.concatenate(
-                        [ids[ci], ids[top].ravel(order="F")]
-                    ),
-                    "sim": np.concatenate(
-                        [
-                            np.zeros(len(ci)),
-                            sims[top, np.arange(len(q_ids))[None, :]].ravel(
-                                order="F"
-                            ),
-                        ]
-                    ),
-                }
-            )
+    def signatures(X):  # (m, d) -> (m, n_tables) packed band signatures
+        return (X @ P.T >= 0).reshape(len(X), n_tables, bits) @ pack
 
-    rows = (
-        ensure_parallelism(t.embeddings, bytes_per_task=ANN_SCAN_BYTES_PER_TASK)
-        .select("vec_id", "embedding")
-        .mapInPandas(
-            scan, schema="kind int, q_id bigint, cand_id bigint, sim double"
-        )
-        .localCheckpoint()  # probe-scale rows; consumed twice below
-    )
-    cand = rows.filter(F.col("kind") == 0).select("q_id", "cand_id")
-    exact = rows.filter(F.col("kind") == 1).select(
-        "q_id", "cand_id", F.col("sim").alias("cos_sim")
-    )
-    return _ann_verdict(exact, cand, "lsh_recall_ok")
+    QS = signatures(Q)  # (p, 8)
+
+    def any_table_match(E):  # (n, p): any band signature equal
+        return (signatures(E)[:, None, :] == QS[None, :, :]).any(axis=2)
+
+    return _ann_scan(t.embeddings, q_ids, Q, any_table_match, "lsh_recall_ok")
 
 
 def kmeans_centroids(
@@ -473,8 +520,9 @@ def kmeans_centroids(
     ``xxhash64(id)`` (a deterministic uniform reservoir; data-dependent
     only, never partitioning-dependent) — with init = first k sample rows
     in id order and a fixed iteration count. Returns the k×d centroid
-    matrix (float64); shared by the IVF quantizer (`ivf_assignments`) and
-    the cone-blocked exact similarity join (`q_dedup_semantic`).
+    matrix (float64; 0×d on an empty sample); shared by the IVF quantizer
+    (`ivf_assignments`) and the cone-blocked exact similarity join
+    (`q_dedup_semantic`).
 
     The hash-rank LIMIT executes as distributed top-k
     (TakeOrderedAndProject: each partition keeps ≤ sample_cap rows, the
@@ -493,9 +541,11 @@ def kmeans_centroids(
         .collect(),
         key=lambda r: r[id_col],
     )
-    S = np.array([r[vec_col] for r in srows], dtype="float64")
+    S = _emb_matrix([r[vec_col] for r in srows])
     k = min(k, len(S))
     C = S[:k].copy()
+    if k == 0:
+        return C
     for _ in range(n_iter):
         assign = np.argmin(
             ((S[:, None, :] - C[None, :, :]) ** 2).sum(-1), axis=1
@@ -554,20 +604,14 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     alongside the LSH path (IVF gives tunable recall via n_probe; LSH
     gives constant-time bucketing).
 
-    ONE corpus scan does all the work (round-4 consolidation, the
-    q_ann_lsh design): the k×d centroid matrix and the probes' 4 nearest
-    cell ids are computed driver-side (both probe/centroid-scale state,
-    shipped in the scan closure); each Arrow batch assigns its vectors to
-    cells with one argmin, emits the (probe, vector) pairs whose cell is
-    probed, and the same batch's normalized matmul emits each probe's
-    within-batch exact top-5 partials (the global top-5 is a subset of
-    the union of batch top-5s, so the exact side stays exact; the
-    partials carry the global (sim desc, cand_id) tie-break —
-    `_topk_partial` — so k-boundary ties are batch-boundary-proof). No
-    corpus-wide assignment table, no bucket join, no distinct — a vector
-    lives in exactly one batch, so a pair is emitted once. Downstream is
-    probe-scale only. At deployment scale the per-batch cell match is the
-    map side of the cell equi-join; past closure scale (many probes) the
+    ONE corpus scan does all the work (`_ann_scan`, shared with
+    q_ann_lsh): the k×d centroid matrix and the probes' 4 nearest cell ids
+    are computed driver-side (both probe/centroid-scale state, shipped in
+    the scan closure); each Arrow batch assigns its vectors to cells with
+    one argmin and emits the (probe, vector) pairs whose cell is probed,
+    next to the exact top-5 partials. No corpus-wide assignment table, no
+    bucket join, no distinct. At deployment scale the per-batch cell match
+    is the map side of the cell equi-join; past closure scale (many probes) the
     explicit broadcast join over `ivf_assignments` comes back —
     tests/test_ann_recall.py pins the bucketing semantics either way.
 
@@ -575,77 +619,19 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (oracle recomputes it) plus ivf_recall_ok — ≥1 of the exact top-5 in
     the probed cells (measured ≥0.4 at both test scales; bound 0.2)."""
     import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    from ..partitioning import ensure_parallelism
 
     t = load(spark, sf_dir)
     C = kmeans_centroids(t.embeddings, k=16)
-    q_ids, Q = _probe_matrix(sf_dir, 5, embeddings=t.embeddings)
-    q_norms = np.sqrt((Q * Q).sum(axis=1))
+    q_ids, Q, _ = fetch_probes(sf_dir, t.embeddings, {"vec_id": 5})
     # 4 nearest cells per probe (driver-side: k×d matrix, trivially small)
     d2 = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(-1)
     probe_cells = np.argsort(d2, axis=1)[:, :4]  # (p, 4)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            ids = pdf["vec_id"].to_numpy()
-            cells = np.argmin(
-                ((E[:, None, :] - C[None, :, :]) ** 2).sum(-1), axis=1
-            )
-            # candidate = vector whose cell is among the probe's 4: (n, p)
-            hit = (cells[:, None, None] == probe_cells[None, :, :]).any(axis=2)
-            hit &= ids[:, None] != q_ids[None, :]
-            ci, cj = np.nonzero(hit)
-            sims = (E @ Q.T) / (
-                np.sqrt((E * E).sum(axis=1))[:, None] * q_norms[None, :]
-            )
-            # round-before-select: see q_ann_lsh's scan — the rounded
-            # value is the only batch-shape-invariant ranking key.
-            sims = np.round(sims, 8)
-            sims[ids[:, None] == q_ids[None, :]] = -2.0  # mask self-match
-            k = min(5, len(ids))
-            top = _topk_partial(sims, ids, k)  # (k, p) row indices
-            yield pd.DataFrame(
-                {
-                    "kind": np.concatenate(
-                        [
-                            np.zeros(len(ci), dtype="int32"),
-                            np.ones(k * len(q_ids), dtype="int32"),
-                        ]
-                    ),
-                    "q_id": np.concatenate([q_ids[cj], np.repeat(q_ids, k)]),
-                    "cand_id": np.concatenate(
-                        [ids[ci], ids[top].ravel(order="F")]
-                    ),
-                    "sim": np.concatenate(
-                        [
-                            np.zeros(len(ci)),
-                            sims[top, np.arange(len(q_ids))[None, :]].ravel(
-                                order="F"
-                            ),
-                        ]
-                    ),
-                }
-            )
+    def in_probed_cell(E):  # (n, p): the vector's cell is among the probe's 4
+        cells = np.argmin(((E[:, None, :] - C[None, :, :]) ** 2).sum(-1), axis=1)
+        return (cells[:, None, None] == probe_cells[None, :, :]).any(axis=2)
 
-    rows = (
-        ensure_parallelism(t.embeddings, bytes_per_task=ANN_SCAN_BYTES_PER_TASK)
-        .select("vec_id", "embedding")
-        .mapInPandas(
-            scan, schema="kind int, q_id bigint, cand_id bigint, sim double"
-        )
-        .localCheckpoint()  # probe-scale rows; consumed twice below
-    )
-    cand = rows.filter(F.col("kind") == 0).select("q_id", "cand_id")
-    exact = rows.filter(F.col("kind") == 1).select(
-        "q_id", "cand_id", F.col("sim").alias("cos_sim")
-    )
-    return _ann_verdict(exact, cand, "ivf_recall_ok")
+    return _ann_scan(t.embeddings, q_ids, Q, in_probed_cell, "ivf_recall_ok")
 
 
 @query(
@@ -688,10 +674,7 @@ def q_embed_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM embeddings WHERE vec_id < 25),
     scored AS (
       SELECT q.q_id, q.true_label, e.vec_id AS cand_id, e.label AS cand_label,
-             round({_DOT_SQL.format(a='q.q_emb', b='e.embedding')}
-             / (sqrt({_DOT_SQL.format(a='q.q_emb', b='q.q_emb')})
-                * sqrt({_DOT_SQL.format(a='e.embedding', b='e.embedding')})), 8)
-               AS cos_sim
+             round({cosine_sql('q.q_emb', 'e.embedding')}, 8) AS cos_sim
       FROM q CROSS JOIN embeddings e
       WHERE e.vec_id >= 25
     ),
@@ -720,48 +703,18 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     by majority label of their nearest neighbors in the rest of the corpus
     — the weak-labeling / label-propagation primitive of a curation
     pipeline (assign topics to unlabeled docs from their embedded
-    neighbors). Same Arrow-batch matmul scan as q_cosine_topk — one pass
-    over the corpus, no shuffle of it; ranking happens on the
+    neighbors). Same Arrow-batch matmul scan as q_cosine_topk
+    (`cosine_pairs` over the vec_id >= 25 corpus) — one pass over the
+    corpus, no shuffle of it; ranking happens on the
     (queries x k) scored slice. Neighbor ranking and vote tie-breaks both
     order on ROUNDED similarity then ids, so the top-5 boundary is
     engine-independent; majority ties resolve to the smallest label.
     """
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
     t = load(spark, sf_dir)
-    qrows = (
-        t.embeddings.filter(F.col("vec_id") < 25)
-        .select("vec_id", "embedding", "label")
-        .collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype="int64")
-    q_labels = {int(r["vec_id"]): int(r["label"]) for r in qrows}
-    Q = np.array([r["embedding"] for r in qrows], dtype="float64")
-    q_norms = np.sqrt((Q * Q).sum(axis=1))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["vec_id"] >= 25]
-            if pdf.empty:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            sims = (E @ Q.T) / (
-                np.sqrt((E * E).sum(axis=1))[:, None] * q_norms[None, :]
-            )
-            n, k = sims.shape
-            yield pd.DataFrame(
-                {
-                    "q_id": np.tile(q_ids, n),
-                    "cand_id": np.repeat(pdf["vec_id"].to_numpy(), k),
-                    "cand_label": np.repeat(pdf["label"].to_numpy(), k),
-                    "cos_sim": sims.ravel(),
-                }
-            )
-
-    scored = t.embeddings.mapInPandas(
-        score, schema="q_id bigint, cand_id bigint, cand_label int, cos_sim double"
+    q_ids, Q, extras = fetch_probes(sf_dir, t.embeddings, {"vec_id": 25},
+                                    extra=("label",))
+    scored = cosine_pairs(
+        t.embeddings.filter(F.col("vec_id") >= 25), q_ids, Q
     ).withColumn("cos_sim", F.round("cos_sim", 8))
     nn_w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("cand_id")
@@ -776,7 +729,7 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_votes").desc(), F.col("cand_label")
     )
     truth = spark.createDataFrame(
-        [(int(q), int(l)) for q, l in sorted(q_labels.items())],
+        [(int(q), int(l)) for q, l in zip(q_ids, extras["label"])],
         "q_id bigint, true_label int",
     )
     return (
@@ -1481,9 +1434,7 @@ MINE_PROBE_LIM = 128
           WHERE label >= 5),
     pairs AS (
       SELECT a_id, b_id,
-             round({_DOT_SQL.format(a='a_emb', b='b_emb')}
-             / (sqrt({_DOT_SQL.format(a='a_emb', b='a_emb')})
-                * sqrt({_DOT_SQL.format(a='b_emb', b='b_emb')})), 8) AS cos
+             round({cosine_sql('a_emb', 'b_emb')}, 8) AS cos
       FROM a CROSS JOIN b
     ),
     ma AS (
@@ -1534,70 +1485,29 @@ def q_crosslingual_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     is MUTUAL (the target's own best margin points back). Downstream
     keeps mutual rows as sentence pairs.
 
-    Scale shape: the target corpus is scanned ONCE by an Arrow-batched
-    mapInPandas whose closure carries the (<= {MINE_PROBE_LIM})-row probe
-    matrix (the q_cosine_topk broadcast-dim pattern) — one numpy matmul
-    per batch, no shuffle of the corpus; only the |probes| x |targets|
-    scored pairs (linear in the corpus) reach the ranking exchanges. The
-    pair table checkpoints once (three consumers: both top-k folds and
-    the margin join); per-side top-{MARGIN_K} means fold SEQUENTIALLY
-    over the value-sorted list so both engines sum in one order
-    (bit-identical margins, the established float contract); ranking
-    runs on ROUNDED margins with id tie-breaks. At full mining scale
-    (both sides fact-sized) the probe side shards into
-    broadcastable chunks and q_ann_ivf prefilters candidates — this
-    operator is the exact per-chunk kernel."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
+    Scale shape: the target corpus is scanned ONCE by `cosine_pairs`
+    against the (<= {MINE_PROBE_LIM})-row probe matrix (the q_cosine_topk
+    scan) — one numpy matmul per batch, no shuffle of the corpus; only the
+    |probes| x |targets| scored pairs (linear in the corpus) reach the
+    ranking exchanges. The pair table checkpoints once (three consumers:
+    both top-k folds and the margin join); per-side top-{MARGIN_K} means
+    fold SEQUENTIALLY over the value-sorted list so both engines sum in
+    one order (bit-identical margins, the established float contract);
+    ranking runs on ROUNDED margins with id tie-breaks. At full mining
+    scale (both sides fact-sized) the probe side shards into broadcastable
+    chunks and q_ann_ivf prefilters candidates — this operator is the
+    exact per-chunk kernel."""
     t = load(spark, sf_dir)
-    pdf = None
-    if os.path.isdir(sf_dir):
-        try:
-            import pyarrow.parquet as pq
-
-            pdf = pq.read_table(
-                os.path.join(sf_dir, "embeddings.parquet"),
-                columns=["vec_id", "embedding"],
-                filters=[("vec_id", "<", MINE_PROBE_LIM), ("label", "<", 5)],
-            ).to_pandas()
-        except Exception:
-            pdf = None
-    if pdf is None:
-        pdf = (
-            t.embeddings.filter(
-                (F.col("vec_id") < MINE_PROBE_LIM) & (F.col("label") < 5)
-            )
-            .select("vec_id", "embedding")
-            .toPandas()
-        )
-    pdf = pdf.sort_values("vec_id")
-    a_ids = pdf["vec_id"].to_numpy(dtype="int64")
-    A = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-    a_norms = np.sqrt((A * A).sum(axis=1))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for bdf in batches:
-            E = np.stack(bdf["embedding"].to_numpy()).astype("float64")
-            sims = (A @ E.T) / (
-                a_norms[:, None] * np.sqrt((E * E).sum(axis=1))[None, :]
-            )  # (|A|, n)
-            n = E.shape[0]
-            yield pd.DataFrame(
-                {
-                    "a_id": np.repeat(a_ids, n),
-                    "b_id": np.tile(bdf["vec_id"].to_numpy(), len(a_ids)),
-                    "cos": sims.ravel(),
-                }
-            )
-
+    a_ids, A, _ = fetch_probes(
+        sf_dir, t.embeddings, {"vec_id": MINE_PROBE_LIM, "label": 5}
+    )
     pairs = (
-        t.embeddings.filter(F.col("label") >= 5)
-        .mapInPandas(score, schema="a_id bigint, b_id bigint, cos double")
-        .withColumn("cos", F.round("cos", 8))
+        cosine_pairs(t.embeddings.filter(F.col("label") >= 5), a_ids, A)
+        .select(
+            F.col("q_id").alias("a_id"),
+            F.col("cand_id").alias("b_id"),
+            F.round("cos_sim", 8).alias("cos"),
+        )
         .localCheckpoint()
     )
 
@@ -1982,9 +1892,6 @@ RRF_TOPN = 20
 def _rrf_oracle() -> str:
     from .text import bm25_scored_ctes
 
-    dot_pe = _DOT_SQL.format(a="e.embedding", b="p.p_emb")
-    dot_ee = _DOT_SQL.format(a="e.embedding", b="e.embedding")
-    dot_pp = _DOT_SQL.format(a="p.p_emb", b="p.p_emb")
     return f"""
     WITH {bm25_scored_ctes()},
     lex_top AS (
@@ -1996,7 +1903,7 @@ def _rrf_oracle() -> str:
     probe AS (SELECT embedding AS p_emb FROM embeddings WHERE vec_id = 0),
     dense_scored AS (
       SELECT e.vec_id AS doc_id,
-             round({dot_pe} / (sqrt({dot_ee}) * sqrt({dot_pp})), 8) AS cos_sim
+             round({cosine_sql('e.embedding', 'p.p_emb')}, 8) AS cos_sim
       FROM embeddings e, probe p
       WHERE e.vec_id <> 0
     ),
@@ -2108,18 +2015,12 @@ def _mmr_oracle() -> str:
     vec_id 0; step k picks argmax of round(L*rel - (1-L)*max_sim_to_
     selected, 8) with vec_id tie-breaks over 8dp-rounded sims, so both
     engines follow the identical trajectory."""
-    dot_ep = _DOT_SQL.format(a="e.embedding", b="p.p_emb")
-    dot_ee = _DOT_SQL.format(a="e.embedding", b="e.embedding")
-    dot_pp = _DOT_SQL.format(a="p.p_emb", b="p.p_emb")
-    dot_ab = _DOT_SQL.format(a="a.embedding", b="b.embedding")
-    dot_aa = _DOT_SQL.format(a="a.embedding", b="a.embedding")
-    dot_bb = _DOT_SQL.format(a="b.embedding", b="b.embedding")
     lam, mu = MMR_LAMBDA, round(1.0 - MMR_LAMBDA, 10)
     parts = [f"""
     WITH probe AS (SELECT embedding AS p_emb FROM embeddings WHERE vec_id = 0),
     scored AS (
       SELECT e.vec_id, e.embedding,
-             round({dot_ep} / (sqrt({dot_ee}) * sqrt({dot_pp})), 8) AS rel
+             round({cosine_sql('e.embedding', 'p.p_emb')}, 8) AS rel
       FROM embeddings e, probe p WHERE e.vec_id <> 0
     ),
     pool AS (
@@ -2130,7 +2031,7 @@ def _mmr_oracle() -> str:
     ),
     sims AS (
       SELECT a.vec_id AS va, b.vec_id AS vb,
-             round({dot_ab} / (sqrt({dot_aa}) * sqrt({dot_bb})), 8) AS sim
+             round({cosine_sql('a.embedding', 'b.embedding')}, 8) AS sim
       FROM pool a JOIN pool b ON a.vec_id <> b.vec_id
     ),
     sel1 AS (

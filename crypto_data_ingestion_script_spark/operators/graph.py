@@ -98,9 +98,12 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the FINAL ranks round to 8dp (oracle: round(rank, 8) on r8
     only). Per-node message sums accumulate in a different order here
     (numpy add.at over ≤625 edge rows) than in a shuffle or in DuckDB's
-    aggregate, drifting ≤ a few ulp; the 8dp output rounding absorbs it,
-    exactly as it already absorbed Spark-vs-DuckDB order drift. The final
-    rounding itself uses _round_half_up_vec, bit-equivalent to F.round.
+    aggregate, drifting ≤ a few ulp. The 8dp output rounding absorbs that
+    drift unless a rank lies within a few ulp of a half at the 8th digit:
+    that case is residual risk (as for Spark-vs-DuckDB order drift) which
+    scripts/rounding_lint.py checks for, not something the rounding rules
+    out. The final rounding rule, _round_half_up_vec, is bit-equivalent
+    to F.round.
     Normalized transition weights p = w / sum_w(src) are bit-identical in
     all three engines (integer-valued float64 sums, one IEEE division)."""
     t = load(spark, sf_dir)

@@ -22,3 +22,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def zero_row_sf_dir(sf_dir, tmp_path_factory):
+    """Zero-row copies of every table in ``sf_dir`` (pyarrow ``slice(0, 0)``,
+    schemas kept): the empty day a scheduled job must survive."""
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("sf_zero_rows")
+    for name in sorted(os.listdir(sf_dir)):
+        if name.endswith(".parquet"):
+            table = pq.read_table(os.path.join(sf_dir, name))
+            pq.write_table(table.slice(0, 0), out / name)
+    return str(out)

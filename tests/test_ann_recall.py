@@ -109,3 +109,21 @@ def test_ivf_assignments_match_onescan_cells(spark, sf_dir):
     # and the centroid matrix is the shared deterministic one
     C2 = kmeans_centroids(t.embeddings, k=16)
     assert np.allclose(C, C2)
+
+
+def test_probe_fetch_spark_fallback_matches_pyarrow(spark, sf_dir):
+    """`fetch_probes` reads a local table with pyarrow and anything else
+    (a ``file://`` URI is not an ``os.path.isdir``) through Spark; both
+    paths must return the same ids, matrix and extra columns bit for bit."""
+    from crypto_data_ingestion_script_spark.llm.similarity import fetch_probes
+
+    t = load(spark, sf_dir)
+    ids, Q, extras = fetch_probes(sf_dir, t.embeddings, {"vec_id": 25},
+                                  extra=("label",))
+    ids2, Q2, extras2 = fetch_probes("file://" + sf_dir, t.embeddings,
+                                     {"vec_id": 25}, extra=("label",))
+    assert len(ids) > 0 and Q.shape == (len(ids), 64)
+    assert ids.tolist() == ids2.tolist()
+    assert Q.dtype == Q2.dtype == np.float64
+    assert Q.tobytes() == Q2.tobytes()
+    assert extras["label"].tolist() == extras2["label"].tolist()

@@ -5,6 +5,7 @@ instead, dataCollector.py:140-163 assumes non-empty metrics)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crypto_data_ingestion_script_spark.catalog import load
@@ -83,3 +84,33 @@ def test_dsir_on_target_free_corpus(spark, sf_dir):
     out = dsir_logweights(non_en).toPandas()
     assert len(out) == non_en.count()
     assert out["dsir_logweight"].notna().all()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_ann_ivf",
+        "q_ann_lsh",
+        "q_cosine_topk",
+        "q_crosslingual_mine",
+        "q_dedup_embedding",
+        "q_knn_classify",
+    ],
+)
+def test_embedding_scans_on_zero_rows(name, spark, zero_row_sf_dir):
+    """The probe-vs-corpus embedding scans on zero-row tables: no probe
+    rows (a (0, 64) probe matrix) and no corpus batches must give an empty
+    result with the oracle's columns, not a numpy crash."""
+    from crypto_data_ingestion_script_spark.registry import load_all
+
+    from .oracle_diff import duck_connection
+
+    spec = load_all()[name]
+    out = spec.fn(spark, zero_row_sf_dir).toPandas()
+    con = duck_connection(zero_row_sf_dir)
+    try:
+        oracle = con.execute(spec.oracle).fetchdf()
+    finally:
+        con.close()
+    assert len(out) == 0 and len(oracle) == 0
+    assert list(out.columns) == list(oracle.columns)
