@@ -15,20 +15,26 @@ salting changed any value, the gate would catch it):
 
 - **Salted (replicated-dim) join**: explode the small side ``n_salts``×
   with every salt value, salt the big side deterministically, and equi-join
-  on (key, salt). Each hot join key's probe rows spread over ``n_salts``
-  tasks while every probe row still finds its build rows.
+  on (key, salt). Salt *s* of key *k* is sent to its own reducer, so each
+  hot join key's probe rows spread over ``n_salts`` tasks while every
+  probe row still finds its build rows.
 
 AQE's runtime skew-join splitting (on in session.RUNTIME_CONFS) handles
 sort-merge skew automatically; these explicit operators cover what AQE
 cannot: aggregation skew, and broadcast-ineligible dims with hot keys.
 
-Salts are ``pmod(xxhash64(unique_col), n)`` — no RNG, stable across runs,
-retries, and re-planning (a nondeterministic salt would break task retry
-exactly-once semantics).
+Salts are ``pmod(xxhash64(unique_col, "_salt"), n)`` (``_salt``) — no RNG,
+stable across runs, retries, and re-planning (a nondeterministic salt would
+break task retry exactly-once semantics). The ``"_salt"`` domain tag makes
+the salt independent of the plain ``xxhash64(unique_col)``: a caller that
+selected or bucketed rows by that hash (``pmod(xxhash64(id), 10) < 3``)
+would otherwise hand the salt correlated low bits, and an even ``n`` would
+then split a hot key unevenly across its salts.
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -36,7 +42,26 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions.exact import MONEY
+from ..partitioning import plan_size_bytes
 from ..registry import query
+
+
+def _salt(salt_on: Column, n: int) -> Column:
+    """The salt in ``[0, n)``: a domain-tagged hash of ``salt_on``, so it
+    shares no bits with an untagged ``xxhash64(salt_on)`` (module doc)."""
+    return F.pmod(F.xxhash64(salt_on, F.lit("_salt")), F.lit(n))
+
+
+def _broadcastable(df: DataFrame) -> bool:
+    """True when the planner would broadcast ``df``: its plan-size estimate
+    is within ``spark.sql.autoBroadcastJoinThreshold`` (negative = off).
+    Without an estimate the answer is False."""
+    conf = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    # Spark byte strings: "10485760b", "64MB", "-1" (binary units).
+    m = re.fullmatch(r"(-?\d+)([kmgtp]?)b?", conf.strip().lower())
+    threshold = int(m[1]) << 10 * " kmgtp".index(m[2])
+    est = plan_size_bytes(df)
+    return threshold >= 0 and est is not None and est <= threshold
 
 
 def salted_aggregate(
@@ -53,7 +78,7 @@ def salted_aggregate(
     the bare keys. The second shuffle moves only ``|groups| × n_salts``
     rows, which is negligible next to the first stage's input.
     """
-    salt = F.pmod(F.xxhash64(salt_on), F.lit(n_salts)).alias("_salt")
+    salt = _salt(salt_on, n_salts).alias("_salt")
     # Partials accumulate in DECIMAL (functions/exact.py): the whole
     # point of salting is that reduction order changes, so a double sum
     # here would differ per salt layout; decimal sums re-associate
@@ -87,13 +112,36 @@ def salted_join(
     contract); the big side's hot keys spread over ``n_salts`` tasks. Use
     when the small side exceeds the broadcast threshold but a handful of
     join keys dominate the big side.
+
+    Both sides are repartitioned by id so that salt *s* of key *k* lands on
+    reducer ``(pmod(hash(k), R) + s) mod R`` with
+    ``R = max(spark.sql.shuffle.partitions, n_salts)``: a key's salts take
+    ``n_salts`` distinct reducers whatever the session's partition count
+    (hash-partitioning ``(k, s)`` lets salts collide). The join keys gain
+    that ``_pid``, a function of (key, salt), so the sort-merge join keeps
+    the pass-through partitioning — one exchange per side — and the rows
+    are unchanged. When the replicated side is within the broadcast
+    threshold the planner broadcasts it and no reducer exists to steer:
+    the plain (key, salt) join is kept.
     """
-    salted_big = big.withColumn("_salt", F.pmod(F.xxhash64(salt_on), F.lit(n_salts)))
+    salted_big = big.withColumn("_salt", _salt(salt_on, n_salts))
     salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("_salt")
     replicated = small.select("*", salts).withColumn(
         "_salt", F.col("_salt").cast("bigint")
     )
-    return salted_big.join(replicated, [key, "_salt"]).drop("_salt")
+    if _broadcastable(replicated):
+        return salted_big.join(replicated, [key, "_salt"]).drop("_salt")
+    r = max(int(big.sparkSession.conf.get("spark.sql.shuffle.partitions")), n_salts)
+    pid = F.pmod(F.pmod(F.hash(key), F.lit(r)) + F.col("_salt"), F.lit(r))
+
+    def steer(df: DataFrame) -> DataFrame:
+        return df.withColumn("_pid", pid.cast("int")).repartitionById(r, "_pid")
+
+    return (
+        steer(salted_big)
+        .join(steer(replicated), ["_pid", key, "_salt"])
+        .drop("_pid", "_salt")
+    )
 
 
 @query(

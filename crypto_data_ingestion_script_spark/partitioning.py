@@ -19,6 +19,10 @@ tasks) and needed (cores would otherwise idle).
 Round-robin rather than key-based: the goal is balanced COMPUTE, and the
 downstream op (broadcast join probe, map-side signature) does not require
 any co-location.
+
+``plan_size_bytes`` is the one plan-statistics probe (the optimizer's
+``sizeInBytes`` estimate, no job runs); ``ensure_parallelism``'s byte cap
+and ``operators/skew.py``'s broadcast check both read it.
 """
 
 from __future__ import annotations
@@ -28,6 +32,26 @@ import logging
 from pyspark.sql import DataFrame
 
 logger = logging.getLogger(__name__)
+
+
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """The optimizer's ``sizeInBytes`` estimate of ``df``'s plan, or None
+    when the probe is unavailable.
+
+    Plan-stat probe via private py4j internals (no public size-estimate
+    API exists). Scoped to the py4j/attribute error classes an API drift
+    would raise, and logged, so a Spark upgrade that moves the accessor
+    can't silently disable its callers (ADVICE r13). A client without
+    py4j gets None as well."""
+    probe_errors: tuple = (AttributeError, ValueError, TypeError)
+    try:
+        import py4j.protocol
+
+        probe_errors += (py4j.protocol.Py4JError,)
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except (ImportError, *probe_errors) as ex:
+        logger.debug("plan_size_bytes: plan-size probe failed (%s)", ex)
+        return None
 
 
 def ensure_parallelism(
@@ -47,28 +71,13 @@ def ensure_parallelism(
     want every core regardless of input bytes and keep the pure
     core-count form. At production scale the planned byte size exceeds
     the cap for any real corpus, so the target degenerates to the session
-    parallelism and behavior is unchanged."""
+    parallelism and behavior is unchanged. Without a plan-size estimate
+    the target falls back to the core count."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if bytes_per_task:
-        # Plan-stat probe via private py4j internals (no public size-estimate
-        # API exists). Scoped to the py4j/attribute error classes an API
-        # drift would raise, and logged, so a Spark upgrade that moves the
-        # accessor can't silently disable the cap (ADVICE r13). A client
-        # without py4j falls back to the core-count target as well.
-        probe_errors: tuple = (AttributeError, ValueError, TypeError)
-        try:
-            import py4j.protocol
-
-            probe_errors += (py4j.protocol.Py4JError,)
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
+        est = plan_size_bytes(df)
+        if est is not None:
             target = max(1, min(target, -(-est // bytes_per_task)))
-        except (ImportError, *probe_errors) as ex:
-            logger.debug(
-                "ensure_parallelism: plan-size probe failed (%s); "
-                "falling back to core-count target %d", ex, target
-            )
     if df.rdd.getNumPartitions() < target * min_factor:
         return df.repartition(target) if target > 1 else df
     return df

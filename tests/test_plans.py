@@ -138,13 +138,50 @@ def test_tpch_q18_broadcasts_survivors(spark, sf_dir):
 
 def test_salted_join_joins_on_salt(spark, sf_dir):
     """Join keys must include the salt column — otherwise the replication
-    just multiplies rows without spreading the hot key."""
+    just multiplies rows without spreading the hot key. A replicated side
+    within the broadcast threshold keeps the plain broadcast join: no
+    exchange is added to steer salts to reducers."""
     from crypto_data_ingestion_script_spark.plans.explain import formatted_plan
 
     df = SPECS["q_join_salted"].fn(spark, sf_dir)
     plan = formatted_plan(df)
     assert "_salt" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+    assert shuffle_count(df) == 0, plan
+
+
+def test_salted_join_steers_salts_past_broadcast_threshold(spark, sf_dir):
+    """With broadcast off, each salt of a key is steered to its own reducer:
+    one id pass-through exchange per join side and no hash exchange above
+    it (the sort-merge join reuses that partitioning), with the same rows
+    as the plain join."""
+    from crypto_data_ingestion_script_spark.operators.skew import salted_join
+    from crypto_data_ingestion_script_spark.plans.explain import formatted_plan
+
+    t = load(spark, sf_dir)
+    big = t.orders.filter(F.col("o_totalprice") > 100000).withColumnRenamed(
+        "o_custkey", "c_custkey"
+    )
+    cols = ["c_custkey", "c_name", "o_orderkey", "o_totalprice"]
+    expected = sorted(big.join(t.customer, "c_custkey").select(cols).collect())
+    # load() has just set both thresholds, so each has a value to restore.
+    confs = ["spark.sql.autoBroadcastJoinThreshold",
+             "spark.sql.adaptive.autoBroadcastJoinThreshold"]
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k in confs:
+        spark.conf.set(k, "-1")
+    try:
+        df = salted_join(
+            big, t.customer, key="c_custkey", salt_on=F.col("o_orderkey"), n_salts=8
+        ).select(cols)
+        plan = formatted_plan(df)
+        assert shuffle_count(df) == 2, plan
+        assert plan.count("shufflepartitionidpassthrough") == 2, plan
+        assert "hashpartitioning" not in plan, plan
+        assert sorted(df.collect()) == expected
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_tpch_q3_hash_joins_no_sorts(spark, sf_dir):
