@@ -137,13 +137,20 @@ def _calibrate_spark(spark, trials: int = TRIALS) -> float:
     return round(best, 4)
 
 
+def duckdb_threads() -> int:
+    """DuckDB gets the cores Spark gets: ``$SPARK_GRAFT_CPUS``, else the
+    host's core count."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else os.cpu_count() or 1
+
+
 def _calibrate_duckdb(trials: int = TRIALS) -> float:
     """The DuckDB twin of _calibrate_spark: same generated rows, same
     group count, same warm + min-of-`trials` posture."""
     import duckdb
 
     con = duckdb.connect()
-    con.execute(f"SET threads={os.cpu_count() or 32}")
+    con.execute(f"SET threads={duckdb_threads()}")
     sql = (
         f"SELECT k, sum(id) FROM (SELECT range AS id, range % {CALIB_GROUPS} "
         f"AS k FROM range({CALIB_ROWS})) GROUP BY k"
@@ -185,7 +192,7 @@ def _measure_duckdb(osql: dict[str, str], sf_dir: str, trials: int,
     import duckdb
 
     con = duckdb.connect()
-    con.execute(f"SET threads={os.cpu_count() or 32}")
+    con.execute(f"SET threads={duckdb_threads()}")
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
         path = os.path.join(sf_dir, f"{t}.parquet")

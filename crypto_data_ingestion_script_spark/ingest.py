@@ -29,6 +29,7 @@ import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .catalog import load
 from .functions.exact import MONEY, dsum
@@ -36,18 +37,27 @@ from .operators.rollup import BAR_COLS, ohlc_bars
 from .registry import query
 
 
-def write_bronze(ticks: DataFrame, bronze_path: str) -> None:
-    """Append raw ticks partitioned by ingest date."""
-    (
-        ticks.withColumn("ingest_date", F.to_date("ts"))
-        .write.mode("append")
-        .partitionBy("ingest_date")
-        .parquet(bronze_path)
-    )
+def write_bronze(ticks: DataFrame, bronze_path: str) -> StructType:
+    """Append raw ticks partitioned by ingest date; returns the schema
+    written: the ticks' own schema plus ``ingest_date`` (``ts`` is stored
+    as the source has it, NTZ or nano-longs depending on the parquet
+    generation). Reading bronze back with it fires no footer-inference
+    job, and an empty bronze (no part files) reads as zero rows."""
+    rows = ticks.withColumn("ingest_date", F.to_date("ts"))
+    rows.write.mode("append").partitionBy("ingest_date").parquet(bronze_path)
+    return rows.schema
 
 
 #: Silver primary key (dataCollector.py:73); ``date`` is also the partition.
 SILVER_KEY = ["date", "hour", "symbol"]
+
+#: The silver row as written (``silver_rows``): read-backs declare it, so
+#: they fire no footer-inference job and an empty table reads as 0 rows.
+SILVER_DDL = (
+    "date date, hour int, symbol string, open_price double, "
+    "high_price double, low_price double, close_price double, "
+    "avg_price double, sample_count bigint"
+)
 
 #: DuckDB oracle shared by every query that reads back a silver table: the
 #: persisted rows must equal the direct aggregation, however they got there.
@@ -101,7 +111,7 @@ def write_silver(rows: DataFrame, silver_path: str) -> None:
 
 def read_silver(spark: SparkSession, silver_path: str) -> DataFrame:
     """Silver read-back in the oracle's shape (``date`` as a timestamp)."""
-    return spark.read.parquet(silver_path).select(
+    return spark.read.schema(SILVER_DDL).parquet(silver_path).select(
         F.col("date").cast("timestamp_ntz").alias("date"),
         "hour",
         "symbol",
@@ -109,9 +119,12 @@ def read_silver(spark: SparkSession, silver_path: str) -> DataFrame:
     )
 
 
-def rollup_to_silver(spark: SparkSession, bronze_path: str, silver_path: str) -> None:
+def rollup_to_silver(
+    spark: SparkSession, bronze_path: str, bronze_schema: StructType, silver_path: str
+) -> None:
     """Bronze → hourly OHLC bars → silver, idempotently."""
-    write_silver(hourly_bars_table(spark.read.parquet(bronze_path)), silver_path)
+    bronze = spark.read.schema(bronze_schema).parquet(bronze_path)
+    write_silver(hourly_bars_table(bronze), silver_path)
 
 
 def apply_retention(spark: SparkSession, bronze_path: str, keep_days: int, now_date) -> int:
@@ -157,8 +170,10 @@ def q_sink_bronze(spark: SparkSession, sf_dir: str) -> DataFrame:
     DATE from directory values), same contract as q_zorder's rewrite."""
     t = load(spark, sf_dir)
     bronze = os.path.join(tempfile.mkdtemp(prefix="bronze_"), "raw_ticks")
-    write_bronze(_tick_stream_from_events(t), bronze)
-    return spark.read.parquet(bronze).select("ts", "symbol", "price", "ingest_date")
+    schema = write_bronze(_tick_stream_from_events(t), bronze)
+    return spark.read.schema(schema).parquet(bronze).select(
+        "ts", "symbol", "price", "ingest_date"
+    )
 
 
 @query(
@@ -174,9 +189,9 @@ def q_sink_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir)
     base = tempfile.mkdtemp(prefix="lake_")
     bronze, silver = os.path.join(base, "raw_ticks"), os.path.join(base, "hourly_bars")
-    write_bronze(_tick_stream_from_events(t), bronze)
-    rollup_to_silver(spark, bronze, silver)
-    rollup_to_silver(spark, bronze, silver)  # idempotency: must not duplicate
+    schema = write_bronze(_tick_stream_from_events(t), bronze)
+    rollup_to_silver(spark, bronze, schema, silver)
+    rollup_to_silver(spark, bronze, schema, silver)  # idempotency: must not duplicate
     return read_silver(spark, silver)
 
 
@@ -195,8 +210,11 @@ def merge_upsert(
     anti-join replaces a per-row UPDATE; at 100 TB the rewrite cost is
     bounded by the touched partitions, never the whole table — the same
     contract as Delta/Iceberg MERGE, built from stock operators.
+
+    The target holds rows of ``updates``' schema, so it is read back with
+    that schema (no footer-inference job).
     """
-    existing = spark.read.parquet(target_path)
+    existing = spark.read.schema(updates.schema).parquet(target_path)
     touched = updates.select(partition_col).distinct()
     # Only partitions that receive updates are rewritten; anti-join keeps
     # the rows of those partitions that no update supersedes.
@@ -260,11 +278,13 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir)
     bronze = os.path.join(tempfile.mkdtemp(prefix="bronze_ret_"), "raw_ticks")
     ticks = _tick_stream_from_events(t)
-    write_bronze(ticks, bronze)
+    schema = write_bronze(ticks, bronze)
     max_date = ticks.agg(F.max(F.to_date("ts"))).collect()[0][0]
-    apply_retention(spark, bronze, keep_days=7, now_date=max_date)
+    if max_date is not None:  # an empty day has no partitions to drop
+        apply_retention(spark, bronze, keep_days=7, now_date=max_date)
     return (
-        spark.read.parquet(bronze)
+        spark.read.schema(schema)
+        .parquet(bronze)
         .groupBy("ingest_date")
         .agg(F.count(F.lit(1)).alias("n_ticks"))
     )

@@ -31,6 +31,23 @@ from ..registry import query
 DAMPING = 0.85
 ITERATIONS = 8
 
+#: Edge rows one single-batch graph kernel (``_pagerank_batch``,
+#: ``_bfs_batch``, ``_hits_batch``, ``_lpa_batch``, ``_bf_batch``) accepts.
+#: Each holds its whole edge list in one Python worker; the distilled
+#: nation graph has at most 25 x 25 = 625 rows.
+ONE_BATCH_MAX_EDGES = 100_000
+
+
+def _check_one_batch(pdf, kernel: str) -> None:
+    """Fail with a clear message when a data-sized edge list reaches a
+    single-batch kernel, instead of exhausting the one Python worker."""
+    if len(pdf) > ONE_BATCH_MAX_EDGES:
+        raise ValueError(
+            f"{kernel}: {len(pdf)} edge rows exceed the single-batch cap of "
+            f"{ONE_BATCH_MAX_EDGES}; distill the edge list first or use a "
+            "distributed loop (e.g. bfs_distances)"
+        )
+
 
 def _oracle(iterations: int = ITERATIONS, d: float = DAMPING) -> str:
     """Generate the unrolled fixed-iteration PageRank SQL."""
@@ -139,6 +156,7 @@ def _pagerank_batch(pdf):
     rounding contract). Executor-side numpy: normalize out-weights, then
     rank = (1-d)/n + d * Σ_in rank[src] * p, final ranks rounded 8dp with
     the F.round-equivalent HALF_UP rule."""
+    _check_one_batch(pdf, "_pagerank_batch")
     import numpy as np
     import pandas as pd
 
@@ -491,6 +509,7 @@ def _bfs_batch(pdf):
     synchronous frontier expansion with min-fold — the exact trajectory
     of bfs_distances' distributed loop (dist_{r+1}[v] = min(dist_r[v],
     min over edges (s,v) of dist_r[s]+1)), integer-exact."""
+    _check_one_batch(pdf, "_bfs_batch")
     import pandas as pd
 
     edges = list(zip(pdf["src"].astype(int), pdf["dst"].astype(int)))
@@ -672,6 +691,7 @@ def _hits_batch(pdf):
     Executor-side numpy; rounds follow the oracle trajectory exactly:
     auth = round8(L1-normalized weighted in-hub sum), then hub =
     round8(L1-normalized weighted out-auth sum), per round."""
+    _check_one_batch(pdf, "_hits_batch")
     import numpy as np
     import pandas as pd
 
@@ -826,6 +846,7 @@ def _lpa_batch(pdf):
     """All {LPA_ITERS} LPA rounds over one distilled edge-list batch:
     synchronous updates, integer vote sums, (max weight, min label)
     argmax — exactly the oracle's window trajectory."""
+    _check_one_batch(pdf, "_lpa_batch")
     import numpy as np
     import pandas as pd
 
@@ -948,6 +969,7 @@ def _bf_batch(pdf):
     """All {BF_ROUNDS} Bellman-Ford relaxations over one distilled
     edge-list batch — integer min-plus folds, following the oracle's
     round trajectory exactly (unreached nodes stay absent)."""
+    _check_one_batch(pdf, "_bf_batch")
     import pandas as pd
 
     edges = list(

@@ -23,14 +23,37 @@ def simple_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _section_ids(plan: str, header: str) -> set[str]:
+    """Operator ids on the tree lines under every ``header`` line (e.g.
+    ``== Initial Plan ==``) of a ``formatted`` explain."""
+    ids: set[str] = set()
+    level = None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :"))
+        if header in line:
+            level = depth
+        elif level is not None and line.strip() and depth > level:
+            ids.update(re.findall(r"\((\d+)\)", line))
+        else:
+            level = None
+    return ids
+
+
 def _node_count(df: DataFrame, node: str) -> int:
     """Count physical-plan nodes by their detail-section headers.
 
     ``formatted`` explain prints every node twice (tree line + ``(n) Node``
     detail block); counting raw substrings double-counts. The detail header
-    is the unambiguous occurrence.
+    is the unambiguous occurrence. Once an adaptive plan has run, the
+    explain holds both its final and its initial plan; nodes only the
+    initial plan has are not counted.
     """
-    return len(re.findall(rf"^\(\d+\) {node}\b", formatted_plan(df), re.MULTILINE))
+    plan = formatted_plan(df)
+    stale = _section_ids(plan, "== Initial Plan ==") - _section_ids(
+        plan, "== Final Plan =="
+    )
+    headers = re.findall(rf"^\((\d+)\) {node}\b", plan, re.MULTILINE)
+    return sum(1 for i in headers if i not in stale)
 
 
 def has_pushed_filters(df: DataFrame) -> bool:

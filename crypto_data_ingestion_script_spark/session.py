@@ -16,6 +16,9 @@ Scale posture (100 TB design point, SURVEY.md §7.4.6):
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -44,6 +47,36 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+def session_cores(spark: SparkSession) -> int:
+    """The session's core count: ``$SPARK_GRAFT_CPUS`` when set, else the
+    context's ``defaultParallelism``."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else spark.sparkContext.defaultParallelism
+
+
+#: Held for every ``session_confs`` block: two threads saving and restoring
+#: the same key would otherwise leave one thread's value behind.
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def session_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the ``with`` block, then put each
+    key back as it was (unset when it had no value)."""
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+
 def configure(spark: SparkSession) -> SparkSession:
     """Apply runtime confs (idempotent). Safe on a driver-owned session."""
     for k, v in RUNTIME_CONFS.items():
@@ -53,18 +86,20 @@ def configure(spark: SparkSession) -> SparkSession:
             # Non-settable in this build — fine, it's an optimization conf.
             pass
     try:
-        # One shuffle partition per available core beats the 200 default —
-        # and OVER-partitioning is not free either: every stateful
-        # streaming operator materializes one state-store instance per
-        # shuffle partition per micro-batch, so a 32-partition conf on an
-        # 8-core driver session made every stream pay 4× the state-store
-        # commit overhead (measured 9.9 s → 1.3 s on the RocksDB stream
-        # at sf0.01, local[8]). Size to the session's ACTUAL parallelism
-        # (env-overridable); AQE coalescing keeps the number soft for
-        # batch plans on a real cluster.
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        n = int(cpus) if cpus else spark.sparkContext.defaultParallelism
-        spark.conf.set("spark.sql.shuffle.partitions", str(max(n, 8)))
+        # Batch plans: one shuffle partition per core beats the 200
+        # default, with a floor of 8. AQE coalesces the 8 at runtime, and
+        # they balance the similarity joins better than one hash
+        # partition per core: with the floor removed, perfbench
+        # dedup_curation at local[2] (5 pairs) went pass_s 4.30 -> 4.47 s
+        # and cold_pass_s 15.7 -> 16.7 s, warm q_jaccard_join and
+        # q_dedup_near ~10-15% slower. Streams do not get the floor: a
+        # stream runs in a cloned session with AQE off, so every stateful
+        # operator keeps one state store per shuffle partition per
+        # micro-batch and nothing coalesces them. streaming.jobs starts
+        # each stream with one shuffle partition per core instead.
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(max(session_cores(spark), 8))
+        )
     except Exception:
         pass
     return spark

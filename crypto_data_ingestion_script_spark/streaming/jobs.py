@@ -37,6 +37,7 @@ from ..functions.exact import davg
 from ..ingest import SILVER_ORACLE, read_silver, silver_rows, write_silver
 from ..operators.rollup import BAR_COLS, HOURLY_BARS_ORACLE, bar_aggs
 from ..registry import query
+from ..session import session_confs, session_cores
 
 EVENTS_DDL = (
     "event_id bigint, ts timestamp_ntz, user_id bigint, "
@@ -48,11 +49,11 @@ def stream_ckpt_dir(prefix: str = "ckpt_") -> str:
     """Checkpoint dir for the availableNow test harness: RAM-backed
     /dev/shm when present, OS tmp otherwise. Every micro-batch commit
     fsyncs an offset log, a commit log, and one state-store delta file
-    per shuffle partition per stateful operator — a chained
-    join+aggregation batch is ~150 small fsyncs, which is why streaming
-    walls were hypersensitive to host I/O contention (judge's r9
-    concurrent sweep read q_stream_chained_stateful at 41 s vs 6 s
-    idle). Durability across driver restarts is irrelevant for a
+    per shuffle partition (one per core, see ``_run_available``) per
+    stateful operator — a chained join+aggregation batch is ~150 small
+    fsyncs, which is why streaming walls were hypersensitive to host I/O
+    contention (a concurrent sweep read q_stream_chained_stateful at
+    41 s vs 6 s idle). Durability across driver restarts is irrelevant for a
     fresh-per-call harness checkpoint; a production deployment points
     checkpointLocation at durable storage and pays that fsync cost by
     design."""
@@ -135,21 +136,31 @@ def _hour_bars(out: DataFrame) -> DataFrame:
 LAST_QUERY_PROGRESS: list = []
 
 
-def _run_available(writer: DataStreamWriter) -> None:
+def _run_available(spark: SparkSession, writer: DataStreamWriter) -> None:
     """Drive a configured stream writer to completion: fresh harness
     checkpoint, availableNow trigger, progress kept in
     ``LAST_QUERY_PROGRESS``. The checkpoint makes restarts exactly-once —
     the reference's restart duplicate-key hazard (dataCollector.py:146-150)
     is structurally gone — but once the query has terminated it is dead
-    weight (in RAM when /dev/shm backed), so it is removed either way."""
+    weight (in RAM when /dev/shm backed), so it is removed either way.
+
+    The stream starts with one shuffle partition per core, not
+    ``configure()``'s batch floor of 8: it runs in a session cloned at
+    ``start()`` with AQE off, where every stateful operator keeps one
+    state store per shuffle partition and nothing coalesces them. The
+    clone holds the count from then on (and the first batch records it in
+    the fresh checkpoint), so the caller's conf is restored as soon as
+    ``start()`` returns."""
     global LAST_QUERY_PROGRESS
     ckpt = stream_ckpt_dir()
     try:
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        cores = {"spark.sql.shuffle.partitions": str(session_cores(spark))}
+        with session_confs(spark, cores):
+            q = (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
         q.awaitTermination()
         LAST_QUERY_PROGRESS = [p.json for p in q.recentProgress]
     finally:
@@ -163,10 +174,11 @@ def run_to_memory(agg: DataFrame, output_mode: str = "complete") -> DataFrame:
     result DataFrame is bound (the DataFrame keeps the sink's rows alive
     only as long as the caller holds it)."""
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    _run_available(
-        agg.writeStream.outputMode(output_mode).format("memory").queryName(name)
-    )
     spark = agg.sparkSession
+    _run_available(
+        spark,
+        agg.writeStream.outputMode(output_mode).format("memory").queryName(name),
+    )
     out = spark.table(name)
     spark.catalog.dropTempView(name)
     return out
@@ -321,7 +333,7 @@ def q_stream_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="stream_silver_")
     silver = os.path.join(base, "hourly_bars")
     agg = tumbling_ohlc_stream(_events_stream(spark, sf_dir))
-    _run_available(stream_to_silver(agg, silver))
+    _run_available(spark, stream_to_silver(agg, silver))
     return read_silver(spark, silver)
 
 
@@ -415,18 +427,9 @@ def q_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     job would run it: per-batch deltas to the checkpoint, full SST uploads
     only at maintenance intervals."""
     load(spark, sf_dir)
-    prev = {k: spark.conf.get(k, None) for k in ROCKSDB_CONFS}
-    for k, v in ROCKSDB_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with session_confs(spark, ROCKSDB_CONFS):
         agg = tumbling_ohlc_stream(_events_stream(spark, sf_dir))
         out = run_to_memory(agg, output_mode="complete")
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return _hour_bars(out)
 
 
@@ -564,7 +567,7 @@ def stream_incremental_dedup(stream: DataFrame, corpus: DataFrame) -> DataFrame:
             outdir
         )
 
-    _run_available(stream.writeStream.foreachBatch(screen_batch))
+    _run_available(spark, stream.writeStream.foreachBatch(screen_batch))
     return spark.read.parquet(outdir)
 
 

@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from bench import HEADLINE
+from bench import HEADLINE, duckdb_threads
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 TRIALS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
@@ -33,7 +33,7 @@ def main() -> None:
 
     osql = e.oracle_sql()
     con = duckdb.connect()
-    con.execute(f"SET threads={os.cpu_count() or 32}")
+    con.execute(f"SET threads={duckdb_threads()}")
     for t in TABLES:
         path = os.path.join(SF_DIR, f"{t}.parquet")
         src = f"read_parquet('{path}/*.parquet')" if os.path.isdir(path) else f"'{path}'"

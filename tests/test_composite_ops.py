@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from crypto_data_ingestion_script_spark.operators.behavior import cdc_apply
 from crypto_data_ingestion_script_spark.operators.graph import bfs_distances
 from crypto_data_ingestion_script_spark.registry import load_all
@@ -57,6 +59,25 @@ def test_bfs_min_over_multiple_paths(spark):
     )
     got = {r.node: r.dist for r in bfs_distances(spark, edges, 0, 4).collect()}
     assert got == {0: 0, 1: 1, 3: 1}
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    ["_pagerank_batch", "_bfs_batch", "_hits_batch", "_lpa_batch", "_bf_batch"],
+)
+def test_single_batch_graph_kernel_refuses_data_sized_edges(kernel):
+    """A single-batch kernel holds its whole edge list in one Python
+    worker: past ONE_BATCH_MAX_EDGES rows it fails with a clear message
+    before doing any work."""
+    import pandas as pd
+
+    from crypto_data_ingestion_script_spark.operators import graph
+
+    n = graph.ONE_BATCH_MAX_EDGES + 1
+    ids = pd.Series(range(n)) % 25
+    pdf = pd.DataFrame({"src": ids, "dst": (ids + 1) % 25, "w": 1})
+    with pytest.raises(ValueError, match="single-batch cap"):
+        getattr(graph, kernel)(pdf)
 
 
 def test_welch_ttest_known_answer(spark, sf_dir):

@@ -86,6 +86,24 @@ def test_dsir_on_target_free_corpus(spark, sf_dir):
     assert out["dsir_logweight"].notna().all()
 
 
+def _assert_empty_like_oracle(name, spark, zero_row_sf_dir):
+    """Query ``name`` on zero-row tables returns no rows, as its oracle
+    does, with the oracle's column names."""
+    from crypto_data_ingestion_script_spark.registry import load_all
+
+    from .oracle_diff import duck_connection
+
+    spec = load_all()[name]
+    out = spec.fn(spark, zero_row_sf_dir).toPandas()
+    con = duck_connection(zero_row_sf_dir)
+    try:
+        oracle = con.execute(spec.oracle).fetchdf()
+    finally:
+        con.close()
+    assert len(out) == 0 and len(oracle) == 0
+    assert list(out.columns) == list(oracle.columns)
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -101,16 +119,51 @@ def test_embedding_scans_on_zero_rows(name, spark, zero_row_sf_dir):
     """The probe-vs-corpus embedding scans on zero-row tables: no probe
     rows (a (0, 64) probe matrix) and no corpus batches must give an empty
     result with the oracle's columns, not a numpy crash."""
-    from crypto_data_ingestion_script_spark.registry import load_all
+    _assert_empty_like_oracle(name, spark, zero_row_sf_dir)
 
-    from .oracle_diff import duck_connection
 
-    spec = load_all()[name]
-    out = spec.fn(spark, zero_row_sf_dir).toPandas()
-    con = duck_connection(zero_row_sf_dir)
-    try:
-        oracle = con.execute(spec.oracle).fetchdf()
-    finally:
-        con.close()
-    assert len(out) == 0 and len(oracle) == 0
-    assert list(out.columns) == list(oracle.columns)
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_sink_bronze",
+        "q_sink_silver",
+        "q_sink_partitioned",
+        "q_merge_upsert",
+        "q_retention",
+        "q_stream_silver",
+    ],
+)
+def test_ingest_read_backs_on_zero_rows(name, spark, zero_row_sf_dir):
+    """The bronze/silver round-trips on an empty day: nothing is written,
+    and the read-back (declared schema, no footer to infer from) returns
+    zero rows with the oracle's columns."""
+    _assert_empty_like_oracle(name, spark, zero_row_sf_dir)
+
+
+def test_silver_ddl_is_the_written_row(spark, sf_dir):
+    """SILVER_DDL, which every silver read-back declares, names the columns
+    and types that the batch rollup and the stream's foreachBatch write."""
+    from crypto_data_ingestion_script_spark.ingest import (
+        SILVER_DDL,
+        hourly_bars_table,
+        silver_rows,
+    )
+    from crypto_data_ingestion_script_spark.streaming.jobs import (
+        tumbling_ohlc_stream,
+    )
+
+    def fields(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
+    t = load(spark, sf_dir)
+    ticks = t.events.select(
+        "ts", F.col("event_type").alias("symbol"), F.col("value").alias("price")
+    )
+    declared = fields(spark.createDataFrame([], SILVER_DDL))
+    assert fields(hourly_bars_table(ticks)) == declared
+    events = t.events.withColumn("ts", F.col("ts").cast("timestamp"))
+    bars = tumbling_ohlc_stream(events)
+    streamed = silver_rows(
+        bars, F.col("w.start"), F.col("event_type").alias("symbol")
+    )
+    assert fields(streamed) == declared

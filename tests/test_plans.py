@@ -1018,3 +1018,12 @@ def test_proto_select_window_group_limit(spark, sf_dir):
     assert "WindowGroupLimit" in plan
     assert "BroadcastExchange" in plan
     assert "Exchange hashpartitioning" not in plan.split("BroadcastExchange")[1]
+
+
+def test_shuffle_count_ignores_initial_plan_after_action(spark, sf_dir):
+    """Once an adaptive plan has run, its explain prints the final and the
+    initial plan; each exchange is counted once, before and after."""
+    df = SPECS["q_salted_agg"].fn(spark, sf_dir)
+    before = shuffle_count(df)
+    df.collect()
+    assert shuffle_count(df) == before == 2

@@ -132,3 +132,41 @@ def test_repeated_calls_leave_no_session_residue(spark, sf_dir, name):
     assert _temp_views(spark) == views
     assert _ckpt_dirs() - ckpts == set()
     assert {k: spark.conf.get(k) for k in _PINNED_CONFS} == _PINNED_CONFS
+
+
+def test_session_confs_restores_under_concurrent_swaps():
+    """Threads that swap the same session conf at once each see their own
+    value inside the block, and the conf reads as before once all are
+    done (an unlocked save/set/restore leaves one thread's value behind)."""
+    import sys
+    import types
+    from concurrent.futures import ThreadPoolExecutor
+
+    from crypto_data_ingestion_script_spark.session import session_confs
+
+    class Conf(dict):
+        def get(self, k, default=None):
+            return super().get(k, default)
+
+        def set(self, k, v):
+            self[k] = v
+
+        def unset(self, k):
+            self.pop(k, None)
+
+    spark = types.SimpleNamespace(conf=Conf(k="orig"))
+
+    def swap(i):
+        for _ in range(200):
+            with session_confs(spark, {"k": str(i), "new": str(i)}):
+                assert (spark.conf.get("k"), spark.conf.get("new")) == (str(i),) * 2
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            for f in [pool.submit(swap, i) for i in range(16)]:
+                f.result(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert dict(spark.conf) == {"k": "orig"}

@@ -3,9 +3,11 @@
 from __future__ import annotations
 
 import datetime as dt
+import json
 import math
 
 import pandas as pd
+import pytest
 
 from crypto_data_ingestion_script_spark.registry import load_all
 from crypto_data_ingestion_script_spark.streaming.stateful import _update_ohlc_state
@@ -199,3 +201,23 @@ def test_session_timeout_toy_islands(spark, tmp_path):
         for op in p.get("stateOperators", [])
     ]
     assert finals and finals[0] <= 1, finals
+
+
+@pytest.mark.parametrize("name", ["q_stream_tumbling", "q_stream_rocksdb"])
+def test_stream_keeps_one_state_store_per_core(spark, sf_dir, name):
+    """A stream runs with AQE off, so nothing coalesces its state stores:
+    every stateful operator gets one per core, not the batch floor of 8,
+    and the caller's shuffle-partition conf reads the same afterwards."""
+    from crypto_data_ingestion_script_spark.session import session_cores
+    from crypto_data_ingestion_script_spark.streaming import jobs
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert SPECS[name].fn(spark, sf_dir).count() > 0
+    assert spark.conf.get(key) == before
+    parts = [
+        op["numShufflePartitions"]
+        for p in map(json.loads, jobs.LAST_QUERY_PROGRESS)
+        for op in p.get("stateOperators", [])
+    ]
+    assert parts and set(parts) == {session_cores(spark)}, parts
