@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import query
+from ..session import session_cores
 
 DAMPING = 0.85
 ITERATIONS = 8
@@ -304,7 +305,7 @@ def copurchase_edges(
     )
     ca = chunks.select("o", F.col("ci").alias("cia"), F.col("cs").alias("csa"))
     cb = chunks.select("o", F.col("ci").alias("cib"), F.col("cs").alias("csb"))
-    spread = li.sparkSession.sparkContext.defaultParallelism
+    spread = session_cores(li.sparkSession)
     cross = (
         ca.join(cb, (ca.o == cb.o) & (F.col("cia") < F.col("cib")))
         .select("csa", "csb")

@@ -31,6 +31,8 @@ import logging
 
 from pyspark.sql import DataFrame
 
+from .session import session_cores
+
 logger = logging.getLogger(__name__)
 
 
@@ -57,9 +59,9 @@ def plan_size_bytes(df: DataFrame) -> int | None:
 def ensure_parallelism(
     df: DataFrame, min_factor: float = 1.0, bytes_per_task: int | None = None
 ) -> DataFrame:
-    """Round-robin repartition ``df`` to the session default parallelism
-    iff its planned partition count is below ``min_factor`` times that
-    parallelism; otherwise return ``df`` unchanged.
+    """Round-robin repartition ``df`` to the session's core count
+    (``session.session_cores``) iff its planned partition count is below
+    ``min_factor`` times that count; otherwise return ``df`` unchanged.
 
     ``bytes_per_task`` (r13 optimization round) caps the widening at
     ``ceil(planned input bytes / bytes_per_task)`` partitions. Use it for
@@ -73,7 +75,7 @@ def ensure_parallelism(
     the cap for any real corpus, so the target degenerates to the session
     parallelism and behavior is unchanged. Without a plan-size estimate
     the target falls back to the core count."""
-    target = df.sparkSession.sparkContext.defaultParallelism
+    target = session_cores(df.sparkSession)
     if bytes_per_task:
         est = plan_size_bytes(df)
         if est is not None:

@@ -4,6 +4,15 @@ The driver harness owns its own SparkSession, so every conf we rely on for
 correctness or performance must be a *runtime-settable* SQL conf applied via
 ``configure(spark)`` — called at the top of every query entry point.
 
+One conf cannot be: ``spark.sql.codegen.cache.maxEntries`` (the generated-
+class cache) is static, read once when the JVM starts, so ``configure()``
+has no way to size it. ``build_session`` sets it to
+``CODEGEN_CACHE_ENTRIES`` (10,000): one pass over the registry compiles
+~4,400 distinct classes, so at Spark's 100-entry default every pass in a
+long-lived session recompiles nearly all of them. The larger cache costs
+0.4-0.6 GB of driver-JVM RSS after a registry pass. A driver that re-runs
+the registry in one session should set the same value on its own builder.
+
 Scale posture (100 TB design point, SURVEY.md §7.4.6):
 - AQE on: runtime shuffle-partition coalescing + skew-join splitting mean one
   static ``spark.sql.shuffle.partitions`` value survives a 1000× scale-up.
@@ -45,6 +54,18 @@ RUNTIME_CONFS: dict[str, str] = {
     # microsecond timestamp_ntz (truncation, matching DuckDB's ns→us read).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+
+#: Entries in Spark's generated-class cache (``spark.sql.codegen.cache.
+#: maxEntries``, default 100, least recently used evicted first). One pass
+#: over all 376 queries (sf0.001, local[4]) compiles ~4,400 distinct
+#: classes; a perfbench dedup_curation pass (local[2]) compiles ~160 and at
+#: the default recompiled ~144 of them on every warm pass. At 4,000 entries
+#: a second registry pass still recompiled 3,781 classes; at 10,000 it
+#: recompiles ~110-130, against ~6,700 at the default. The cost is driver
+#: memory: after two registry passes (2 GB heap) driver-JVM RSS was
+#: 3.0-3.1 GB against 2.5-2.7 GB at the default.
+CODEGEN_CACHE_ENTRIES = 10_000
 
 
 def session_cores(spark: SparkSession) -> int:
@@ -106,7 +127,8 @@ def configure(spark: SparkSession) -> SparkSession:
 
 
 def build_session(app_name: str = "crypto-spark-engine") -> SparkSession:
-    """Local session for tests/bench: ``local[$SPARK_GRAFT_CPUS]``."""
+    """Local session for tests/bench: ``local[$SPARK_GRAFT_CPUS]``, with a
+    generated-class cache of ``CODEGEN_CACHE_ENTRIES``."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cpus}]"
     builder = (
@@ -115,6 +137,7 @@ def build_session(app_name: str = "crypto-spark-engine") -> SparkSession:
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     return configure(spark)

@@ -495,11 +495,12 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the sf_dir documents parquet — schema
-    probed from the batch footer (documents has no encoding drift to
-    normalize, unlike events.ts). Handles both the single-file and the
-    directory layout like _events_stream."""
+    taken from the session's catalog, which read it once (documents has
+    no encoding drift to normalize, unlike events.ts), so no call fires a
+    footer-inference job. Handles both the single-file and the directory
+    layout like _events_stream."""
     probe = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(probe).schema
+    schema = load(spark, sf_dir).documents.schema
     if os.path.isdir(probe):
         return spark.readStream.schema(schema).parquet(probe)
     return (
@@ -548,6 +549,14 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_incremental_dedup(stream, corpus)
 
 
+#: The row ``incremental_near_dedup`` writes per screened document, which
+#: the verdict sink is read back with.
+VERDICT_DDL = (
+    "doc_id bigint, n_matches bigint, best_jaccard double, "
+    "first_match_id bigint, is_novel boolean"
+)
+
+
 def stream_incremental_dedup(stream: DataFrame, corpus: DataFrame) -> DataFrame:
     """Drive a documents-shaped STREAM through the batch incremental
     near-dedup against a static ``corpus``, appending per-doc verdicts to
@@ -568,7 +577,9 @@ def stream_incremental_dedup(stream: DataFrame, corpus: DataFrame) -> DataFrame:
         )
 
     _run_available(spark, stream.writeStream.foreachBatch(screen_batch))
-    return spark.read.parquet(outdir)
+    # Declared, not inferred: no footer job, and a stream that wrote no
+    # file (zero-row documents) reads back zero rows.
+    return spark.read.schema(VERDICT_DDL).parquet(outdir)
 
 
 # Late-bind the shared oracle (llm.dedup imports nothing from streaming,

@@ -3,7 +3,8 @@ PLAIN SparkSession (the grading driver owns its own session — build_session
 confs must not be assumed), with the driver's strict comparison semantics:
 column names, row counts, int-vs-float dtype drift, and order-insensitive
 values. Writes per-query wall times so slow queries surface before the
-driver samples them.
+driver samples them. Its session keeps Spark's 100-entry generated-class
+cache, as a driver's does, so repeated queries recompile their classes.
 
 Usage: python scripts/driver_sim.py [sf_dir] [only] [--strict-driver]
   sf_dir: default /root/testdata/sf0.01

@@ -16,6 +16,8 @@ the optional argv[1]. Plan inspection only builds the DataFrame (lazy) —
 streaming queries DO execute their availableNow batch on construction,
 so the audit takes a few minutes.
 
+Runs on ``local[$SPARK_GRAFT_CPUS]`` (``session.build_session``).
+
 Usage: python scripts/plan_audit.py [out_json] [sf_dir]
 """
 import json
@@ -38,9 +40,9 @@ PATTERNS = (
     "InMemoryTableScan",
 )
 
-from pyspark.sql import SparkSession  # noqa: E402
+from crypto_data_ingestion_script_spark.session import build_session  # noqa: E402
 
-spark = SparkSession.builder.master("local[8]").getOrCreate()
+spark = build_session("plan-audit")
 spark.sparkContext.setLogLevel("ERROR")
 spark.range(1_000_000).selectExpr("sum(id)").collect()
 spark.range(64).repartition(8).mapInPandas(

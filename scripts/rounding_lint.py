@@ -23,6 +23,8 @@ to WHITELIST with a written exactness rationale; the lint exits nonzero
 while any flagged query is unadjudicated, and the artifact
 (ROUNDING_LINT_r{N}.json) lists every emitter either way.
 
+Runs on ``local[$SPARK_GRAFT_CPUS]`` (``session.build_session``).
+
 Usage: python scripts/rounding_lint.py [sf_dir] [out.json]
   sf_dir: default /root/testdata/sf0.01 (the sweep's correctness scale)
 """
@@ -34,7 +36,6 @@ import sys
 
 import numpy as np
 import pandas.api.types as pt
-from pyspark.sql import SparkSession
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/rounding_lint.json"
@@ -173,12 +174,14 @@ def _unrounded(vals: np.ndarray) -> tuple[int, float | None]:
 
 
 def main() -> int:
-    spark = SparkSession.builder.master("local[8]").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     import os
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from crypto_data_ingestion_script_spark.session import build_session
     from crypto_data_ingestion_script_spark.sources.custom import register
+
+    spark = build_session("rounding-lint")
+    spark.sparkContext.setLogLevel("ERROR")
 
     register(spark)
     import __spark_entry__ as e

@@ -131,13 +131,31 @@ def test_embedding_scans_on_zero_rows(name, spark, zero_row_sf_dir):
         "q_merge_upsert",
         "q_retention",
         "q_stream_silver",
+        "q_stream_incremental_dedup",
     ],
 )
 def test_ingest_read_backs_on_zero_rows(name, spark, zero_row_sf_dir):
-    """The bronze/silver round-trips on an empty day: nothing is written,
-    and the read-back (declared schema, no footer to infer from) returns
-    zero rows with the oracle's columns."""
+    """The bronze/silver round-trips and the stream-dedup verdict sink on
+    an empty day: nothing is written, and the read-back (declared schema,
+    no footer to infer from) returns zero rows with the oracle's
+    columns."""
     _assert_empty_like_oracle(name, spark, zero_row_sf_dir)
+
+
+def test_verdict_ddl_is_the_written_row(spark, sf_dir):
+    """VERDICT_DDL, which the stream's verdict read-back declares, names
+    the columns and types that incremental_near_dedup writes."""
+    from crypto_data_ingestion_script_spark.llm.dedup import (
+        incremental_near_dedup,
+    )
+    from crypto_data_ingestion_script_spark.streaming.jobs import VERDICT_DDL
+
+    docs = load(spark, sf_dir).documents
+    written = incremental_near_dedup(docs.limit(4), docs).schema
+    declared = spark.createDataFrame([], VERDICT_DDL).schema
+    assert [(f.name, f.dataType) for f in written.fields] == [
+        (f.name, f.dataType) for f in declared.fields
+    ]
 
 
 def test_silver_ddl_is_the_written_row(spark, sf_dir):

@@ -135,13 +135,16 @@ def test_interleave_matches_reference_morton(spark):
     assert len(set(zip(xs, ys))) == len(set(expect)), "interleave not injective"
 
 
-def test_ensure_parallelism_guard(spark):
+def test_ensure_parallelism_guard(spark, monkeypatch):
     """The scan-parallelism guard repartitions an under-split input to
-    the session parallelism, and passes a well-split input through with
-    an UNCHANGED plan (no added shuffle at scale)."""
+    the session's core count, and passes a well-split input through with
+    an UNCHANGED plan (no added shuffle at scale). The core count is the
+    one ``configure()`` and the stream driver use: ``$SPARK_GRAFT_CPUS``
+    when set."""
     from crypto_data_ingestion_script_spark.partitioning import ensure_parallelism
+    from crypto_data_ingestion_script_spark.session import session_cores
 
-    target = spark.sparkContext.defaultParallelism
+    target = session_cores(spark)
     narrow = spark.range(1000).coalesce(1)
     widened = ensure_parallelism(narrow)
     assert widened.rdd.getNumPartitions() == target
@@ -149,6 +152,9 @@ def test_ensure_parallelism_guard(spark):
 
     wide = spark.range(1000).repartition(target)
     assert ensure_parallelism(wide) is wide
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(target + 1))
+    assert ensure_parallelism(narrow).rdd.getNumPartitions() == target + 1
 
 
 def test_ensure_parallelism_bytes_cap(spark, sf_dir, monkeypatch):
@@ -159,8 +165,9 @@ def test_ensure_parallelism_bytes_cap(spark, sf_dir, monkeypatch):
     parallelism. Without py4j the probe falls back to the core-count
     target instead of raising."""
     from crypto_data_ingestion_script_spark.partitioning import ensure_parallelism
+    from crypto_data_ingestion_script_spark.session import session_cores
 
-    target = spark.sparkContext.defaultParallelism
+    target = session_cores(spark)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     capped = ensure_parallelism(emb, bytes_per_task=32 << 20)
     # testdata embeddings are well under 32 MB: no widening fires.
