@@ -1,7 +1,7 @@
 """Table catalog: lazy parquet loaders over a scale-factor directory.
 
 All declared queries take ``(spark, sf_dir)``; this module turns that into
-cached DataFrame handles. Reads are plain ``spark.read.parquet`` — column
+DataFrame handles. Reads are plain ``spark.read.parquet`` — column
 pruning and predicate pushdown then reach the scan for free (Catalyst
 ``PruneFileSourcePartitions`` / parquet filters), which is the load-bearing
 property at the 100 TB design point.
@@ -10,9 +10,11 @@ property at the 100 TB design point.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -35,53 +37,54 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _NANO_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
+#: Parquet schema per session and table path. Only the schema is kept: a
+#: reader built with ``.schema()`` fires no footer-inference job, yet lists
+#: the table's files afresh, so a part file added to a directory-layout
+#: table between two calls is read by the second. Weak keys: a stopped
+#: session's schemas go with it.
+_SCHEMAS: weakref.WeakKeyDictionary[SparkSession, dict[str, StructType]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
 class Catalog:
-    """Lazy per-table parquet reader bound to one (spark, sf_dir) pair."""
+    """Lazy per-table parquet readers over one sf_dir for one query call:
+    a table read twice in the call is one DataFrame, so a column taken
+    from it resolves in the joins it feeds."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
-        self._cache: dict[str, DataFrame] = {}
+        self._tables: dict[str, DataFrame] = {}
 
     def table(self, name: str) -> DataFrame:
-        if name not in self._cache:
+        if name not in self._tables:
             if name not in TABLE_NAMES:
                 raise KeyError(f"unknown table {name!r}")
             path = os.path.join(self.sf_dir, f"{name}.parquet")
-            df = self.spark.read.parquet(path)
+            schemas = _SCHEMAS.setdefault(self.spark, {})
+            if path not in schemas:
+                schemas[path] = self.spark.read.parquet(path).schema
+            df = self.spark.read.schema(schemas[path]).parquet(path)
             for c in _NANO_TS_COLS.get(name, ()):
                 if c in df.columns and dict(df.dtypes)[c] == "bigint":
                     df = df.withColumn(
                         c,
                         F.expr(f"cast(timestamp_micros({c} div 1000) as timestamp_ntz)"),
                     )
-            self._cache[name] = df
-        return self._cache[name]
+            self._tables[name] = df
+        return self._tables[name]
 
     def __getattr__(self, name: str) -> DataFrame:
         if name in TABLE_NAMES:
             return self.table(name)
         raise AttributeError(name)
 
-    def register_views(self) -> None:
-        """Register every table as a temp view for spark.sql queries."""
-        for name in TABLE_NAMES:
-            self.table(name).createOrReplaceTempView(name)
-
-
-#: Catalog per (session, sf_dir): DataFrame handles are immutable logical
-#: plans, so reuse is safe and skips re-listing files + re-reading parquet
-#: footers for schema on every query call. Keyed by the live session object;
-#: a new session gets a fresh catalog.
-_CATALOGS: dict[tuple[int, str], Catalog] = {}
-
 
 def load(spark: SparkSession, sf_dir: str) -> Catalog:
+    """Table handles for one query call over ``sf_dir``, read with the
+    session's cached schemas (see ``_SCHEMAS``)."""
     from .session import configure
 
     configure(spark)
-    key = (id(spark), sf_dir)
-    cat = _CATALOGS.get(key)
-    if cat is None or cat.spark is not spark:
-        cat = _CATALOGS[key] = Catalog(spark, sf_dir)
-    return cat
+    return Catalog(spark, sf_dir)

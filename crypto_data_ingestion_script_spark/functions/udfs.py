@@ -215,13 +215,13 @@ def q_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("token_split", TokenSplit)
     t = load(spark, sf_dir)
-    t.documents.createOrReplaceTempView("_docs_udtf")
     return spark.sql(
         """
         SELECT d.doc_id, s.pos, s.token
-        FROM _docs_udtf d, LATERAL token_split(d.text) s
+        FROM {documents} d, LATERAL token_split(d.text) s
         WHERE d.doc_id < 50
-        """
+        """,
+        documents=t.documents,
     )
 
 

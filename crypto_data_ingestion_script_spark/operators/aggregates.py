@@ -166,15 +166,15 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     are special cases) through the SQL surface: one Expand over one scan,
     not one scan per set."""
     t = load(spark, sf_dir)
-    t.lineitem.createOrReplaceTempView("lineitem_gs")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                sum(l_quantity) AS sum_qty,
                count(*)        AS n
-        FROM lineitem_gs
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        lineitem=t.lineitem,
     )
 
 

@@ -1,23 +1,32 @@
-"""Iterative graph algorithms on DataFrames (SURVEY §2.M): PageRank by
-power iteration over a weighted edge list — the template for any
-fixed-point computation the lake needs (influence scoring, trust
-propagation, dedup-cluster authority). Near-dup connected components
-(llm/dedup.py) is the other iterative member of the family.
+"""Iterative graph algorithms on DataFrames (SURVEY §2.M).
 
-Graph here: the nation-level trade network — an edge (customer nation →
-supplier nation) weighted by the number of lineitems flowing between them.
-25 nodes, dense, deterministic; node count is dimension-sized while the
-edge WEIGHTS aggregate the full fact table, which is the realistic shape
-(the iteration runs on a tiny graph distilled from 100 TB of events).
+The five nation-graph queries (q_pagerank, q_bfs, q_hits, q_label_prop,
+q_bellman_ford) share one distill-then-iterate template:
 
-Scale notes: each iteration is one broadcast join (ranks are node-sized)
-+ one groupBy(dst) shuffle bounded by the edge list. ``localCheckpoint``
-every few rounds truncates the lineage so the plan doesn't grow linearly
-with iterations — without it, iteration 30's plan contains 30 joins.
+1. ``nation_trade_edges`` distills the fact table ONCE into the nation
+   trade network: an edge (customer nation -> supplier nation) weighted by
+   the number of lineitems between them. lineitem ⋈ orders is the one
+   fact-scale join, customer and supplier are broadcast, and the grouped
+   aggregate leaves at most |nations|² = 625 rows at any scale factor.
+2. ``one_batch`` hands that edge list to a kernel as ONE pandas frame (a
+   single-group ``applyInPandas``). Iteration grain sits below task grain:
+   every round of the 25-node iteration is microseconds of arithmetic, so
+   one vectorized task replaces a per-round join + groupBy loop that paid
+   a job/stage quantum for each round.
+3. Each ``_*_batch`` kernel starts from ``_edge_arrays``, the one
+   ``ONE_BATCH_MAX_EDGES`` guard and node index, and runs all its rounds
+   in that one Python worker. At a billion-node grain the batch step would swap back for
+   the per-round join + fold with node-keyed exchanges that the oracles'
+   unrolled CTEs spell.
 
-The oracle unrolls the same fixed number of iterations as chained CTEs —
-an iterative algorithm with a FULL SQL hash-check, not a rows-only waiver.
-Both sides round to 8 decimals to absorb summation-order drift.
+The oracles unroll the same fixed number of rounds as chained CTEs, so
+every iterative query carries a FULL SQL hash-check, not a rows-only
+waiver. Floating-point kernels round the way ``F.round`` does
+(``_round_half_up_vec``).
+
+Graphs whose node sets grow with the data keep a distributed loop:
+``kcore_survivors`` (q_kcore) peels with node-grain state per round, and
+``triangle_count`` (q_triangles) runs degree-ordered joins.
 """
 
 from __future__ import annotations
@@ -25,29 +34,69 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import Catalog, load
 from ..registry import query
 from ..session import session_cores
 
 DAMPING = 0.85
 ITERATIONS = 8
 
-#: Edge rows one single-batch graph kernel (``_pagerank_batch``,
-#: ``_bfs_batch``, ``_hits_batch``, ``_lpa_batch``, ``_bf_batch``) accepts.
-#: Each holds its whole edge list in one Python worker; the distilled
-#: nation graph has at most 25 x 25 = 625 rows.
+#: Edge rows one single-batch graph kernel accepts (``_edge_arrays``).
+#: Each kernel holds its whole edge list in one Python worker; the
+#: distilled nation graph has at most 25 x 25 = 625 rows.
 ONE_BATCH_MAX_EDGES = 100_000
 
 
-def _check_one_batch(pdf, kernel: str) -> None:
-    """Fail with a clear message when a data-sized edge list reaches a
-    single-batch kernel, instead of exhausting the one Python worker."""
+def nation_trade_edges(t: Catalog) -> DataFrame:
+    """The weighted nation trade network (src, dst, w): customer nation
+    -> supplier nation, ``w`` = the number of lineitems between them."""
+    return (
+        t.lineitem.select("l_orderkey", "l_suppkey")
+        .join(
+            t.orders.select("o_orderkey", "o_custkey"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        .join(
+            F.broadcast(t.customer.select("c_custkey", "c_nationkey")),
+            F.col("o_custkey") == F.col("c_custkey"),
+        )
+        .join(
+            F.broadcast(t.supplier.select("s_suppkey", "s_nationkey")),
+            F.col("l_suppkey") == F.col("s_suppkey"),
+        )
+        .groupBy(
+            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
+        )
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+
+
+def one_batch(edges: DataFrame, fn, schema: str) -> DataFrame:
+    """Run ``fn`` once over every row of ``edges`` as one pandas frame (a
+    single-group ``applyInPandas``); ``schema`` is its output's DDL."""
+    return edges.withColumn("g", F.lit(0)).groupBy("g").applyInPandas(fn, schema)
+
+
+def _edge_arrays(pdf):
+    """Index one edge-list batch ``pdf`` (src, dst[, w]) by node for a
+    single-batch kernel. Fails with a clear message on a data-sized edge
+    list instead of exhausting the one Python worker. Returns ``(nodes,
+    si, di, w)``: the sorted distinct node ids, each edge's source and
+    destination position in ``nodes``, and its weight (1 when ``pdf`` has
+    no ``w`` column)."""
+    import numpy as np
+
     if len(pdf) > ONE_BATCH_MAX_EDGES:
         raise ValueError(
-            f"{kernel}: {len(pdf)} edge rows exceed the single-batch cap of "
-            f"{ONE_BATCH_MAX_EDGES}; distill the edge list first or use a "
-            "distributed loop (e.g. bfs_distances)"
+            f"{len(pdf)} edge rows exceed the single-batch cap of "
+            f"{ONE_BATCH_MAX_EDGES}; distill the edge list first or run the "
+            "rounds as a distributed loop"
         )
+    src = pdf["src"].to_numpy()
+    dst = pdf["dst"].to_numpy()
+    nodes = np.unique(np.concatenate([src, dst]))
+    w = pdf["w"].to_numpy() if "w" in pdf else np.ones(len(pdf), dtype="int64")
+    return nodes, np.searchsorted(nodes, src), np.searchsorted(nodes, dst), w
 
 
 def _oracle(iterations: int = ITERATIONS, d: float = DAMPING) -> str:
@@ -97,20 +146,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     appears has outgoing trade). One fact-table aggregation distills the
     edges; the iteration itself is node-sized.
 
-    Scale shape (r14 optimization: the q_hits/q_label_prop/q_bellman_ford
-    single-batch template): the fact table aggregates ONCE into the
-    content-bound weighted edge list (≤|nations|² rows regardless of fact
-    scale; broadcast dim joins), then ALL {ITERATIONS} rounds of the
-    25-node power iteration run inside ONE Arrow batch — a single-group
-    applyInPandas over the distilled edges. The former form ran every
-    round as a distributed union+groupBy (2 shuffles per round, eager
-    checkpoints every 4 rounds): correct, but ~39 sequential job/stage
-    quanta on 25-row frames for work that is microseconds of arithmetic
-    (measured 2.54 s warm min-of-3 at sf0.1 vs 0.74 s for the
-    identically-shaped q_hits). Iteration grain sits BELOW task grain, so
-    one vectorized task is the idiomatic plan; at a billion-node graph
-    grain the batch step swaps back for the per-round join+groupBy form
-    the oracle spells (same semantics, node-keyed exchanges).
+    Distill-then-iterate (module docstring): all {ITERATIONS} rounds run
+    in one batch over ``nation_trade_edges``.
 
     Rounding contract: the trajectory is plain float64 in both forms —
     only the FINAL ranks round to 8dp (oracle: round(rank, 8) on r8
@@ -124,30 +161,10 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     to F.round.
     Normalized transition weights p = w / sum_w(src) are bit-identical in
     all three engines (integer-valued float64 sums, one IEEE division)."""
-    t = load(spark, sf_dir)
-    edges_raw = (
-        t.lineitem.select("l_orderkey", "l_suppkey")
-        .join(
-            t.orders.select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(t.customer.select("c_custkey", "c_nationkey")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t.supplier.select("s_suppkey", "s_nationkey")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    return (
-        edges_raw.withColumn("g", F.lit(0))
-        .groupBy("g")
-        .applyInPandas(_pagerank_batch, "node int, rank double")
+    return one_batch(
+        nation_trade_edges(load(spark, sf_dir)),
+        _pagerank_batch,
+        "node int, rank double",
     )
 
 
@@ -157,21 +174,14 @@ def _pagerank_batch(pdf):
     rounding contract). Executor-side numpy: normalize out-weights, then
     rank = (1-d)/n + d * Σ_in rank[src] * p, final ranks rounded 8dp with
     the F.round-equivalent HALF_UP rule."""
-    _check_one_batch(pdf, "_pagerank_batch")
     import numpy as np
     import pandas as pd
 
-    src = pdf["src"].to_numpy()
-    dst = pdf["dst"].to_numpy()
-    w = pdf["w"].to_numpy().astype("float64")
-    nodes = np.unique(np.concatenate([src, dst]))
-    idx = {int(n): i for i, n in enumerate(nodes)}
-    si = np.fromiter((idx[int(s)] for s in src), dtype="int64", count=len(src))
-    di = np.fromiter((idx[int(d)] for d in dst), dtype="int64", count=len(dst))
-    outw = np.zeros(len(nodes), dtype="float64")
+    nodes, si, di, w = _edge_arrays(pdf)
+    n = len(nodes)
+    outw = np.zeros(n, dtype="float64")
     np.add.at(outw, si, w)
     p = w / outw[si]
-    n = len(nodes)
     rank = np.full(n, 1.0 / n, dtype="float64")
     for _ in range(ITERATIONS):
         araw = np.zeros(n, dtype="float64")
@@ -468,116 +478,42 @@ def q_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     revisits idempotent, so the fixed round count returns exactly min-hop
     distances — matching the oracle's min over walks.
 
-    Scale shape (r14 optimization: the q_hits single-batch template): the
-    fact table distills ONCE into the distinct nation-pair edge list
-    (≤|nations|² rows at any fact scale, dims broadcast, map-side partial
-    distinct), then all {BFS_ROUNDS} synchronous rounds run in ONE Arrow
-    batch — integer-exact, no rounding contract at all. The former form
-    unrolled the rounds as chained distributed join+groupBy stages (one
-    34 kB plan, 18 sequential job/stage quanta, 3.05 s warm at sf0.1 for
-    microseconds of arithmetic). At a billion-node graph grain the batch
-    swaps back for the distributed frontier loop — kept verbatim as
-    :func:`bfs_distances`, which toy-graph tests still exercise."""
-    t = load(spark, sf_dir)
-    edges = (
-        t.lineitem.select("l_orderkey", "l_suppkey")
-        .join(
-            t.orders.select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(t.customer.select("c_custkey", "c_nationkey")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t.supplier.select("s_suppkey", "s_nationkey")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .select(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .distinct()
-    )
-    return (
-        edges.withColumn("g", F.lit(0))
-        .groupBy("g")
-        .applyInPandas(_bfs_batch, "node int, dist int")
+    Distill-then-iterate (module docstring): all {BFS_ROUNDS} rounds run
+    in one batch over the distinct pairs of ``nation_trade_edges``."""
+    return one_batch(
+        nation_trade_edges(load(spark, sf_dir)).select("src", "dst"),
+        _bfs_batch,
+        "node int, dist int",
     )
 
 
 def _bfs_batch(pdf):
-    """All {BFS_ROUNDS} BFS rounds over one distilled edge-list batch:
-    synchronous frontier expansion with min-fold — the exact trajectory
-    of bfs_distances' distributed loop (dist_{r+1}[v] = min(dist_r[v],
-    min over edges (s,v) of dist_r[s]+1)), integer-exact."""
-    _check_one_batch(pdf, "_bfs_batch")
+    """All {BFS_ROUNDS} BFS rounds from BFS_SOURCE over one distilled
+    edge-list batch (src, dst): min-plus relaxation with unit costs,
+    integer-exact."""
+    return _relax(pdf, BFS_SOURCE, BFS_ROUNDS, "int32")
+
+
+def _relax(pdf, source: int, rounds: int, dist_type: str):
+    """``rounds`` synchronous min-plus relaxations from ``source`` over an
+    edge-list batch: dist_{r+1}[v] = min(dist_r[v], min over edges (s, v)
+    of dist_r[s] + w). Returns (node, dist) sorted by node; unreached
+    nodes stay absent, as in the oracles' unrolled rounds."""
     import pandas as pd
 
-    edges = list(zip(pdf["src"].astype(int), pdf["dst"].astype(int)))
-    dist = {BFS_SOURCE: 0}
-    for _ in range(BFS_ROUNDS):
+    nodes, si, di, w = _edge_arrays(pdf)
+    edges = list(zip(nodes[si].tolist(), nodes[di].tolist(), w.tolist()))
+    dist = {source: 0}
+    for _ in range(rounds):
         new = dict(dist)
-        for s, d in edges:
-            if s in dist:
-                cand = dist[s] + 1
-                if d not in new or cand < new[d]:
-                    new[d] = cand
+        for s, d, cost in edges:
+            if s in dist and (d not in new or dist[s] + cost < new[d]):
+                new[d] = dist[s] + cost
         dist = new
-    nodes = sorted(dist)
+    reached = sorted(dist)
     return pd.DataFrame(
-        {"node": nodes, "dist": [dist[n] for n in nodes]}
-    ).astype({"node": "int32", "dist": "int32"})
-
-
-def bfs_distances(
-    spark: SparkSession,
-    edges: DataFrame,
-    source: int,
-    rounds: int,
-    broadcast_edges_cap_bytes: int = BROADCAST_ADJ_CAP_BYTES,
-    n_edges: int | None = None,
-) -> DataFrame:
-    """BFS frontier-iteration core over directed edges (src, dst): returns
-    (node, dist) for every node within ``rounds`` hops of ``source``.
-    Factored out of q_bfs so toy graphs with known distances exercise it
-    directly (tests).
-
-    Two scale-aware cost decisions (r7, q_bfs 3.1 → see BASELINE.md):
-
-    - **Byte-budgeted edge broadcast**: the edge table is loop-invariant,
-      so when its estimated size (16 B of ints + ~32 B row overhead per
-      edge, from one count over the caller's checkpointed table) fits the
-      cap it is broadcast ONCE and every round's frontier join runs
-      map-side — no per-round join exchange. Past the cap (the 100 TB
-      regime) the shuffle join path is unchanged and still bounded by
-      state = one row per reached node.
-    - **Checkpoint cadence 4, skipping the final round**: each round
-      references ``dist`` once, so the plan grows LINEARLY with rounds —
-      checkpointing exists to bound driver planning time on long
-      iterations, not correctness. At the query's 4-round diameter bound
-      this means the whole BFS executes as ONE job instead of a job per
-      eager checkpoint (the q_dedup_clusters cadence lesson, applied at
-      the round count where it pays)."""
-    # Sizing count: skipped when the caller already knows the edge count
-    # (ADVICE r7 — avoids an extra eager job on the past-cap path too).
-    if n_edges is None:
-        n_edges = edges.count()  # cheap: callers pass a checkpointed table
-    if EDGE_ROW_EST_BYTES * n_edges <= broadcast_edges_cap_bytes:
-        edges = F.broadcast(edges)
-    dist = spark.createDataFrame([(source, 0)], "node int, dist int")
-    for i in range(rounds):
-        frontier = (
-            dist.join(edges, dist.node == edges.src)
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(frontier)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        if (i + 1) % 4 == 0 and (i + 1) < rounds:
-            dist = dist.localCheckpoint(eager=True)
-    return dist
+        {"node": reached, "dist": [dist[n] for n in reached]}
+    ).astype({"node": "int32", "dist": dist_type})
 
 
 #: HITS fixed iteration count (hub/authority mutual recursion).
@@ -646,44 +582,13 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     separates "good consumer" (hub) from "good producer" (authority) —
     both are the distill-then-iterate graph template.
 
-    Scale shape (the q_pagerank architecture, single-job form — r10):
-    the fact table aggregates ONCE into the content-bound weighted edge
-    list (≤|nations|² rows regardless of fact scale; broadcast dim
-    joins), then ALL {HITS_ITERS} rounds of the 25-node mutual recursion
-    run inside ONE Arrow batch — a single-group applyInPandas over the
-    distilled edges. The previous form chained 8 half-rounds of
-    groupBy+window DataFrame stages: correct, but 16+ sequential
-    exchanges on 25-row frames paid a stage quantum each (8.1 s at
-    sf0.01) for work that is microseconds of arithmetic. The iteration
-    grain is BELOW task grain — the idiomatic Spark treatment is one
-    vectorized task, with the scale-bearing distill staying fully
-    distributed. Rounding inside the batch reproduces F.round exactly
-    (HALF_UP over the shortest-decimal representation — Decimal(repr(x))
-    is bit-equivalent to the JVM's BigDecimal.valueOf(double))."""
-    t = load(spark, sf_dir)
-    edges = (
-        t.lineitem.select("l_orderkey", "l_suppkey")
-        .join(
-            t.orders.select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(t.customer.select("c_custkey", "c_nationkey")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t.supplier.select("s_suppkey", "s_nationkey")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    return (
-        edges.withColumn("g", F.lit(0))
-        .groupBy("g")
-        .applyInPandas(_hits_batch, "node int, hub double, auth double")
+    Distill-then-iterate (module docstring): all {HITS_ITERS} rounds run
+    in one batch over ``nation_trade_edges``. Rounding inside the batch
+    reproduces F.round exactly (``_round_half_up_vec``)."""
+    return one_batch(
+        nation_trade_edges(load(spark, sf_dir)),
+        _hits_batch,
+        "node int, hub double, auth double",
     )
 
 
@@ -692,17 +597,10 @@ def _hits_batch(pdf):
     Executor-side numpy; rounds follow the oracle trajectory exactly:
     auth = round8(L1-normalized weighted in-hub sum), then hub =
     round8(L1-normalized weighted out-auth sum), per round."""
-    _check_one_batch(pdf, "_hits_batch")
     import numpy as np
     import pandas as pd
 
-    src = pdf["src"].to_numpy()
-    dst = pdf["dst"].to_numpy()
-    w = pdf["w"].to_numpy().astype("float64")
-    nodes = np.unique(np.concatenate([src, dst]))
-    idx = {int(n): i for i, n in enumerate(nodes)}
-    si = np.fromiter((idx[int(s)] for s in src), dtype="int64", count=len(src))
-    di = np.fromiter((idx[int(d)] for d in dst), dtype="int64", count=len(dst))
+    nodes, si, di, w = _edge_arrays(pdf)
     hub = np.ones(len(nodes), dtype="float64")
     auth = hub
     for _ in range(HITS_ITERS):
@@ -795,39 +693,12 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     nations emerge; the same operator clusters domain link graphs and
     near-dup document graphs at corpus scale.
 
-    Scale shape (the q_hits single-batch template): the fact table
-    distills ONCE into the content-bound weighted edge list (≤|nations|²
-    rows, broadcast dim joins, symmetrized by a union+re-aggregate);
-    then ALL {LPA_ITERS} rounds run in ONE Arrow batch — integer-exact
-    vote sums, no rounding contract needed at all. At a billion-node
-    graph grain the batch step swaps for the per-round join+window
-    form the oracle spells (same semantics, node-keyed exchanges);
-    here iteration grain sits below task grain, so one vectorized task
-    is the idiomatic plan."""
-    t = load(spark, sf_dir)
-    directed = (
-        t.lineitem.select("l_orderkey", "l_suppkey")
-        .join(
-            t.orders.select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(t.customer.select("c_custkey", "c_nationkey")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t.supplier.select("s_suppkey", "s_nationkey")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    Distill-then-iterate (module docstring): ``nation_trade_edges`` is
+    symmetrized by a union + re-aggregate, then all {LPA_ITERS} rounds run
+    in one batch — integer-exact vote sums, no rounding contract."""
+    directed = nation_trade_edges(load(spark, sf_dir))
     edges = (
-        directed.select("src", "dst", "w")
-        .unionAll(
+        directed.unionAll(
             directed.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
             )
@@ -835,34 +706,21 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
     )
-    return (
-        edges.withColumn("g", F.lit(0))
-        .groupBy("g")
-        .applyInPandas(_lpa_batch, "node int, label int")
-        .orderBy("node")
-    )
+    return one_batch(edges, _lpa_batch, "node int, label int").orderBy("node")
 
 
 def _lpa_batch(pdf):
     """All {LPA_ITERS} LPA rounds over one distilled edge-list batch:
     synchronous updates, integer vote sums, (max weight, min label)
     argmax — exactly the oracle's window trajectory."""
-    _check_one_batch(pdf, "_lpa_batch")
     import numpy as np
     import pandas as pd
 
-    src = pdf["src"].to_numpy().astype("int64")
-    dst = pdf["dst"].to_numpy().astype("int64")
-    w = pdf["w"].to_numpy().astype("int64")
-    nodes = np.unique(np.concatenate([src, dst]))
-    idx = {int(n): i for i, n in enumerate(nodes)}
-    si = np.fromiter((idx[int(s)] for s in src), dtype="int64", count=len(src))
-    di = np.fromiter((idx[int(d)] for d in dst), dtype="int64", count=len(dst))
-    label = nodes.copy().astype("int64")
-    n = len(nodes)
+    nodes, si, di, w = _edge_arrays(pdf)
+    label = nodes.astype("int64")
     for _ in range(LPA_ITERS):
         new = label.copy()
-        for v in range(n):
+        for v in range(len(nodes)):
             mask = di == v
             if not mask.any():
                 continue
@@ -926,73 +784,22 @@ def q_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     relaxation, the routing/ETL-dependency-cost shape.
 
     Integer-exact end to end (costs and path sums are BIGINTs — no float
-    contract). Scale shape: fact distills ONCE to the content-bound edge
-    list (broadcast dim joins); all {BF_ROUNDS} relaxations run in ONE
-    Arrow batch over it (the q_hits/q_label_prop single-batch template —
-    iteration grain below task grain). At billion-edge grain the batch
-    swaps for per-round join+min folds with node-keyed exchanges,
-    exactly what the oracle's unrolled CTEs spell."""
-    t = load(spark, sf_dir)
-    edges = (
-        t.lineitem.select("l_orderkey", "l_suppkey")
-        .join(
-            t.orders.select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(t.customer.select("c_custkey", "c_nationkey")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t.supplier.select("s_suppkey", "s_nationkey")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(
-            (
-                F.floor(F.lit(1000000) / F.count(F.lit(1))).cast("bigint")
-                + 1
-            ).alias("w")
-        )
+    contract). Distill-then-iterate (module docstring): all {BF_ROUNDS}
+    relaxations run in one batch over ``nation_trade_edges``, each
+    lineitem count mapped to its cost."""
+    edges = nation_trade_edges(load(spark, sf_dir)).select(
+        "src",
+        "dst",
+        (F.floor(F.lit(1000000) / F.col("w")).cast("bigint") + 1).alias("w"),
     )
-    return (
-        edges.withColumn("g", F.lit(0))
-        .groupBy("g")
-        .applyInPandas(_bf_batch, "node int, dist bigint")
-        .orderBy("node")
-    )
+    return one_batch(edges, _bf_batch, "node int, dist bigint").orderBy("node")
 
 
 def _bf_batch(pdf):
-    """All {BF_ROUNDS} Bellman-Ford relaxations over one distilled
-    edge-list batch — integer min-plus folds, following the oracle's
-    round trajectory exactly (unreached nodes stay absent)."""
-    _check_one_batch(pdf, "_bf_batch")
-    import pandas as pd
-
-    edges = list(
-        zip(
-            pdf["src"].astype(int),
-            pdf["dst"].astype(int),
-            pdf["w"].astype(int),
-        )
-    )
-    dist = {BF_SOURCE: 0}
-    for _ in range(BF_ROUNDS):
-        new = dict(dist)
-        for s, d, w in edges:
-            if s in dist:
-                cand = dist[s] + w
-                if d not in new or cand < new[d]:
-                    new[d] = cand
-        dist = new
-    nodes = sorted(dist)
-    return pd.DataFrame(
-        {"node": nodes, "dist": [dist[n] for n in nodes]}
-    ).astype({"node": "int32", "dist": "int64"})
+    """All {BF_ROUNDS} Bellman-Ford relaxations from BF_SOURCE over one
+    distilled edge-list batch — integer min-plus folds, following the
+    oracle's round trajectory exactly (unreached nodes stay absent)."""
+    return _relax(pdf, BF_SOURCE, BF_ROUNDS, "int64")
 
 
 #: k-core parameters: degree floor and the fixed peeling horizon. The
@@ -1062,8 +869,7 @@ def kcore_survivors(
     Scale shape: state is two NODE-grain survivor sets, re-derived each
     round from the loop-invariant edge table — the edge table itself is
     never mutated or checkpointed (at 100 TB it stays a scan; the
-    node-grain sets are the only things materialized, the q_bfs state
-    discipline). Survivor sets are localCheckpoint'ed each round so the
+    node-grain sets are the only things materialized). Survivor sets are localCheckpoint'ed each round so the
     plan doesn't re-derive the whole peeling history per iteration.
 
     r14 optimization (one eager job per round instead of 2–2.5): the old

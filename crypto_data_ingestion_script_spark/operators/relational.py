@@ -411,13 +411,13 @@ def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts as a literal into the outer filter (Catalyst plans a
     ReusedSubquery/scalar-subquery node, not a join)."""
     t = load(spark, sf_dir)
-    t.orders.createOrReplaceTempView("orders_sq")
     return spark.sql(
         """
         SELECT o_orderkey, o_totalprice
-        FROM orders_sq
-        WHERE o_totalprice > 2 * (SELECT avg(o_totalprice) FROM orders_sq)
-        """
+        FROM {orders}
+        WHERE o_totalprice > 2 * (SELECT avg(o_totalprice) FROM {orders})
+        """,
+        orders=t.orders,
     )
 
 
@@ -436,15 +436,15 @@ def q_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlation key — same plan family as q_join_semi, declared through the
     SQL surface the reference's README promises."""
     t = load(spark, sf_dir)
-    t.customer.createOrReplaceTempView("customer_sq")
-    t.orders.createOrReplaceTempView("orders_sq2")
     return spark.sql(
         """
         SELECT c_custkey, c_name
-        FROM customer_sq c
-        WHERE EXISTS (SELECT 1 FROM orders_sq2 o
+        FROM {customer} c
+        WHERE EXISTS (SELECT 1 FROM {orders} o
                       WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-        """
+        """,
+        customer=t.customer,
+        orders=t.orders,
     )
 
 
@@ -648,13 +648,13 @@ def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercise the parser path, not the DataFrame builder.
     """
     t = load(spark, sf_dir)
-    t.events.createOrReplaceTempView("events")
     return spark.sql(
         """
         SELECT event_type, date_trunc('day', ts) AS day,
                count(*) AS n, round(sum(value), 6) AS total
-        FROM events
+        FROM {events}
         GROUP BY ALL
         ORDER BY ALL
-        """
+        """,
+        events=t.events,
     )

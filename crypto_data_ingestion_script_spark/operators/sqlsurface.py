@@ -49,20 +49,20 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     (root, depth) membership counts. Depth is log10(maxkey) levels of
     shrinking-frontier self-joins."""
     t = load(spark, sf_dir)
-    t.customer.createOrReplaceTempView("customer_rc")
     return spark.sql(
         """
         WITH RECURSIVE anc AS (
           SELECT c_custkey, c_custkey AS root, 0 AS depth
-          FROM customer_rc WHERE c_custkey < 10
+          FROM {customer} WHERE c_custkey < 10
           UNION ALL
           SELECT c.c_custkey, a.root, a.depth + 1
-          FROM customer_rc c JOIN anc a ON c.c_custkey div 10 = a.c_custkey
+          FROM {customer} c JOIN anc a ON c.c_custkey div 10 = a.c_custkey
           WHERE c.c_custkey >= 10
         )
         SELECT root, depth, count(*) AS n_members
         FROM anc GROUP BY root, depth
-        """
+        """,
+        customer=t.customer,
     )
 
 
@@ -110,19 +110,19 @@ def q_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders per customer) — Catalyst decorrelates the limit to a window
     rank over o_custkey instead of a per-customer nested loop."""
     t = load(spark, sf_dir)
-    t.customer.createOrReplaceTempView("customer_lat")
-    t.orders.createOrReplaceTempView("orders_lat")
     return spark.sql(
         """
         SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-        FROM customer_lat c, LATERAL (
+        FROM {customer} c, LATERAL (
           SELECT o_orderkey, o_totalprice
-          FROM orders_lat o
+          FROM {orders} o
           WHERE o.o_custkey = c.c_custkey
           ORDER BY o_totalprice DESC, o_orderkey
           LIMIT 2
         ) t
-        """
+        """,
+        customer=t.customer,
+        orders=t.orders,
     )
 
 

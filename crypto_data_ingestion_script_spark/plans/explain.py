@@ -9,8 +9,37 @@ operator docstrings has a matching executable assertion here.
 from __future__ import annotations
 
 import re
+import tempfile
 
 from pyspark.sql import DataFrame
+
+#: Per-build noise in a plan string, each with its stand-in: expression
+#: ids, Connect plan ids, object hashes of literal arrays and memory sinks,
+#: temporary directories, and the uuid suffix of stream output views.
+_PLAN_NOISE = [
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"(UnsafeArrayData|MemorySink)@[0-9a-f]+"), r"\1@"),
+    (
+        re.compile(
+            r"(?:file:)?(?:%s)/[^\s,\]\)]*"
+            % "|".join(map(re.escape, {tempfile.gettempdir(), "/dev/shm"}))
+        ),
+        "<tmp>",
+    ),
+    (re.compile(r"stream_out_\w+"), "stream_out_*"),
+]
+
+
+def normalized_plan(df: DataFrame) -> str:
+    """``df``'s optimized logical plan with the per-build noise stripped
+    (see ``_PLAN_NOISE``): two builds of one query give equal strings
+    exactly when Catalyst planned them alike, so a change can show that
+    it left a query's plan as it was."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+    for pattern, stand_in in _PLAN_NOISE:
+        plan = pattern.sub(stand_in, plan)
+    return plan
 
 
 def formatted_plan(df: DataFrame) -> str:

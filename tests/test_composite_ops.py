@@ -10,7 +10,7 @@ import math
 import pytest
 
 from crypto_data_ingestion_script_spark.operators.behavior import cdc_apply
-from crypto_data_ingestion_script_spark.operators.graph import bfs_distances
+from crypto_data_ingestion_script_spark.operators.graph import _bfs_batch
 from crypto_data_ingestion_script_spark.registry import load_all
 
 
@@ -42,22 +42,26 @@ def test_cdc_apply_out_of_order_delivery(spark):
     assert len(got) == 1 and got[0].current_value == 9.0
 
 
-def test_bfs_path_graph(spark):
+def _bfs(edges) -> dict:
+    """Hop distances from ``_bfs_batch`` over a toy (src, dst) list. Its
+    BFS_SOURCE (0) and BFS_ROUNDS (4) are the source and round count the
+    graphs below are written for."""
+    import pandas as pd
+
+    out = _bfs_batch(pd.DataFrame(edges, columns=["src", "dst"]))
+    return dict(zip(out["node"], out["dist"]))
+
+
+def test_bfs_path_graph():
     # 0 -> 1 -> 2 -> 3 (directed path): dist == hop index; 4 rounds cover.
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3)], "src int, dst int"
-    )
-    got = {r.node: r.dist for r in bfs_distances(spark, edges, 0, 4).collect()}
+    got = _bfs([(0, 1), (1, 2), (2, 3)])
     assert got == {0: 0, 1: 1, 2: 2, 3: 3}
 
 
-def test_bfs_min_over_multiple_paths(spark):
+def test_bfs_min_over_multiple_paths():
     # Diamond with a shortcut: 0->1->3 and 0->3 — min-hop wins (1, not 2);
     # node 4 unreachable from 0 stays absent.
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 3), (0, 3), (4, 0)], "src int, dst int"
-    )
-    got = {r.node: r.dist for r in bfs_distances(spark, edges, 0, 4).collect()}
+    got = _bfs([(0, 1), (1, 3), (0, 3), (4, 0)])
     assert got == {0: 0, 1: 1, 3: 1}
 
 

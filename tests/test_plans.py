@@ -14,6 +14,7 @@ from crypto_data_ingestion_script_spark.catalog import load
 from crypto_data_ingestion_script_spark.plans.explain import (
     has_partial_aggregation,
     has_pushed_filters,
+    normalized_plan,
     read_schema_columns,
     shuffle_count,
     uses_broadcast_join,
@@ -1027,3 +1028,12 @@ def test_shuffle_count_ignores_initial_plan_after_action(spark, sf_dir):
     before = shuffle_count(df)
     df.collect()
     assert shuffle_count(df) == before == 2
+
+
+def test_normalized_plan_equal_across_builds(spark, sf_dir):
+    """Two builds of one query print different expression ids but the
+    same normalized plan."""
+    a, b = (SPECS["q_pagerank"].fn(spark, sf_dir) for _ in range(2))
+    raw = [df._jdf.queryExecution().optimizedPlan().toString() for df in (a, b)]
+    assert raw[0] != raw[1]
+    assert normalized_plan(a) == normalized_plan(b)

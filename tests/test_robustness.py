@@ -117,6 +117,13 @@ def _temp_views(spark) -> set:
         "q_merge_upsert",
         "q_stream_incremental_dedup",
         "q_source_datasource_stream",
+        "q_grouping_sets",
+        "q_scalar_subquery",
+        "q_exists_correlated",
+        "q_group_by_all",
+        "q_recursive_cte",
+        "q_lateral",
+        "q_udtf",
     ],
 )
 def test_repeated_calls_leave_no_session_residue(spark, sf_dir, name):
@@ -132,6 +139,30 @@ def test_repeated_calls_leave_no_session_residue(spark, sf_dir, name):
     assert _temp_views(spark) == views
     assert _ckpt_dirs() - ckpts == set()
     assert {k: spark.conf.get(k) for k in _PINNED_CONFS} == _PINNED_CONFS
+
+
+def test_caller_view_survives_sql_surface_query(spark, sf_dir):
+    """A query written in SQL reads its tables through views of its own:
+    the caller's view named like one of them keeps its rows."""
+    spark.range(1).createOrReplaceTempView("events")
+    try:
+        load_all()["q_group_by_all"].fn(spark, sf_dir).collect()
+        assert spark.table("events").count() == 1
+    finally:
+        spark.catalog.dropTempView("events")
+
+
+def test_catalog_sees_part_files_added_between_calls(spark, sf_dir, tmp_path):
+    """A long-lived session reads a directory-layout table afresh on each
+    call: a part file added after the first call is in the second."""
+    import shutil
+
+    table = tmp_path / "orders.parquet"
+    table.mkdir()
+    shutil.copy(os.path.join(sf_dir, "orders.parquet"), table / "part-0.parquet")
+    first = load(spark, str(tmp_path)).orders.count()
+    shutil.copy(os.path.join(sf_dir, "orders.parquet"), table / "part-1.parquet")
+    assert load(spark, str(tmp_path)).orders.count() == 2 * first > 0
 
 
 def test_session_confs_restores_under_concurrent_swaps():
