@@ -29,6 +29,9 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
+
+from simlib import duck_connection, duckdb_threads  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -137,13 +140,6 @@ def _calibrate_spark(spark, trials: int = TRIALS) -> float:
     return round(best, 4)
 
 
-def duckdb_threads() -> int:
-    """DuckDB gets the cores Spark gets: ``$SPARK_GRAFT_CPUS``, else the
-    host's core count."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    return int(cpus) if cpus else os.cpu_count() or 1
-
-
 def _calibrate_duckdb(trials: int = TRIALS) -> float:
     """The DuckDB twin of _calibrate_spark: same generated rows, same
     group count, same warm + min-of-`trials` posture."""
@@ -188,16 +184,8 @@ def _measure_duckdb(osql: dict[str, str], sf_dir: str, trials: int,
                     skip: tuple[str, ...] = ()) -> dict[str, float]:
     """DuckDB on the same files: warm once, then min-of-`trials` — the
     methodology BASELINE.md records for the oracle side. Handles the
-    multi-file directory layout of benchdata/sf1."""
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(f"SET threads={duckdb_threads()}")
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        src = f"read_parquet('{path}/*.parquet')" if os.path.isdir(path) else f"'{path}'"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM {src}")
+    multi-file directory layout of benchdata/sf1 (`simlib.duck_connection`)."""
+    con = duck_connection(sf_dir)
     timings: dict[str, float] = {}
     for name in HEADLINE:
         sql = osql.get(name)

@@ -200,7 +200,9 @@ def q_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressible (token split with ordinals) so the oracle can hash it;
     the DuckDB side zips two unnests. LATERAL-joined against the documents
     table, so the UDTF runs distributed per input partition — at scale the
-    cost model is identical to any Arrow-batched Python stage. Prefer
+    cost model is identical to any Arrow-batched Python stage. The UDTF is
+    called directly, never registered, so no function is left in the
+    caller's session. Prefer
     posexplode(split(...)) (JVM-side, q_posexplode) when expressions
     suffice; reference test parity per SURVEY §5."""
     from pyspark.sql.functions import udtf
@@ -213,15 +215,9 @@ def q_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, piece in enumerate(text.split(" ")):
                 yield i, piece
 
-    spark.udtf.register("token_split", TokenSplit)
-    t = load(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT d.doc_id, s.pos, s.token
-        FROM {documents} d, LATERAL token_split(d.text) s
-        WHERE d.doc_id < 50
-        """,
-        documents=t.documents,
+    d = load(spark, sf_dir).documents.filter(F.col("doc_id") < 50).alias("d")
+    return d.lateralJoin(TokenSplit(F.col("d.text").outer()).alias("s")).select(
+        "d.doc_id", "s.pos", "s.token"
     )
 
 

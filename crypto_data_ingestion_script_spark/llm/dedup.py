@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import query
-from .similarity import cosine_pairs, cosine_sql, fetch_probes
+from .similarity import _DOT_SQL, cosine_pairs, cosine_sql, fetch_probes
 
 def _tokens():
     return F.split(F.col("text"), " ")
@@ -679,13 +679,6 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEM_DOT = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform(range(1, 65), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))), "
-    "(acc, x) -> acc + x)"
-)
-
 _SEM_TAU = 0.45
 
 #: Per-worker budget (bytes) for ONE sims buffer in cone_blocked_edges'
@@ -892,13 +885,13 @@ def cone_blocked_edges(
     ),
     norms AS MATERIALIZED (
       SELECT gid, embedding,
-             sqrt({_SEM_DOT.format(a='embedding', b='embedding')}) AS nrm
+             sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
       FROM dv
     ),
     edges AS MATERIALIZED (
       SELECT a.gid AS a, b.gid AS b
       FROM norms a JOIN norms b ON a.gid < b.gid
-      WHERE {_SEM_DOT.format(a='a.embedding', b='b.embedding')}
+      WHERE {_DOT_SQL.format(a='a.embedding', b='b.embedding')}
             / (a.nrm * b.nrm) >= {_SEM_TAU}
     ),
     sym AS (SELECT a AS src, b AS dst FROM edges

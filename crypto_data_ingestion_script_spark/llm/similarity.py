@@ -2088,10 +2088,10 @@ def q_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy's grain is the CONSTANT-sized pool, which is below task
     grain, so per-step DataFrame machinery (a job + codegen compile per
     pick in the previous form, 3 s at sf0.01 for arithmetic on 20 rows)
-    is replaced by microseconds of numpy. Batch-side rounding is
-    Decimal(repr(x)) HALF_UP — bit-equivalent to F.round (see
-    operators/graph.py:_round_half_up_vec); rel/sim inputs arrive
-    already engine-rounded, so the trajectory is unchanged."""
+    is replaced by microseconds of numpy. Scores are rounded the way
+    the oracle's DuckDB `round` does (`_round8_like_duckdb`); rel/sim
+    inputs arrive already engine-rounded, so both engines follow the
+    same trajectory."""
     t = load(spark, sf_dir)
     probe = t.embeddings.filter(F.col("vec_id") == 0).select(
         _as_double(F.col("embedding")).alias("p_emb")
@@ -2135,17 +2135,30 @@ def q_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _round8_like_duckdb(x: float) -> float:
+    """DuckDB's `round(x, 8)` on a double: scale by 1e8 in binary, round
+    half away from zero, scale back. It differs from F.round (HALF_UP on
+    the shortest decimal repr) when the scaled double lands on a half the
+    decimal does not: x = 0.18616597499999998 scales to exactly
+    18616597.5, so DuckDB gives 0.18616598 where F.round gives
+    0.18616597."""
+    import math
+
+    y = x * 1e8
+    r = math.floor(abs(y))
+    if abs(y) - r >= 0.5:
+        r += 1
+    return math.copysign(r, y) / 1e8
+
+
 def _mmr_batch(pdf):
-    """The {MMR_K}-step greedy over one (va, rel_a, vb, sim) pool batch —
-    rel and sim arrive engine-rounded 8dp; scores are rounded HALF_UP over
-    the shortest-decimal repr (≡ F.round)."""
+    """The {MMR_K}-step greedy over one (va, rel_a, vb, sim) pool batch.
+    rel and sim arrive engine-rounded 8dp. Each score is rounded by
+    `_round8_like_duckdb`, as the oracle's `round(..., 8)` rounds it, so
+    scores, and the picks they decide, match the oracle's bit for bit."""
     import pandas as pd
 
-    from ..operators.graph import _round_half_up_vec
-
-    def r8(x: float) -> float:
-        return float(_round_half_up_vec([x], 8)[0])
-
+    r8 = _round8_like_duckdb
     rel = dict(
         pdf[["va", "rel_a"]].drop_duplicates().itertuples(index=False)
     )

@@ -142,15 +142,18 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import re
-    import tempfile
+
+    from pyspark import SparkFiles
 
     t = load(spark, sf_dir)
     tag = re.sub(r"\W", "_", sf_dir).strip("_")
     db = "bucketed_q_" + tag
-    # External-path tables: a stale warehouse dir from a previous session
-    # would make managed-table creation fail with LOCATION_ALREADY_EXISTS;
-    # an explicit location + overwrite mode is restart-safe.
-    base = os.path.join(tempfile.gettempdir(), "bucketed_q", tag)
+    # External-path tables under the application's own scratch dir (Spark
+    # deletes it when the application stops): a stale warehouse dir from
+    # a previous session would make managed-table creation fail with
+    # LOCATION_ALREADY_EXISTS, and a path shared by every process on the
+    # host lets one process overwrite the part files another is reading.
+    base = os.path.join(SparkFiles.getRootDirectory(), "bucketed_q", tag)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     for name, df, key in (
         ("orders_b", t.orders, "o_orderkey"),

@@ -123,6 +123,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("revenue").desc(), "o_orderdate", "l_orderkey")
         .limit(10)
+        .select("l_orderkey", "revenue", "o_orderdate")
     )
 
 
@@ -346,6 +347,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("revenue").desc(), "c_custkey")
         .limit(20)
+        .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
     )
 
 

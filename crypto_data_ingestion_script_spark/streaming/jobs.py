@@ -129,10 +129,9 @@ def _hour_bars(out: DataFrame) -> DataFrame:
 
 
 #: Per-batch engine progress of the LAST availableNow-driven query
-#: (list of StreamingQueryProgress dicts). Observability hook only — the
-#: fixed-cost decomposition script (scripts/stream_decomp.py) reads the
-#: engine's own durationMs / stateOperators breakdown from here; no query
-#: semantics depend on it.
+#: (list of StreamingQueryProgress dicts). Observability hook only — it
+#: exposes the engine's own durationMs / stateOperators breakdown to tests;
+#: no query semantics depend on it.
 LAST_QUERY_PROGRESS: list = []
 
 

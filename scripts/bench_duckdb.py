@@ -2,8 +2,8 @@
 """DuckDB side of the scale bench: times each headline query's oracle SQL
 (the exact text the correctness gate uses) on a given sf dir, warm,
 min-of-N — the same methodology bench.py applies to the Spark side
-(BASELINE.md). Handles both single-file tables and the multi-file
-directory layout written by make_benchdata.py.
+(BASELINE.md). `simlib.duck_connection` reads both single-file tables
+and the multi-file directory layout written by make_benchdata.py.
 
 Usage: python scripts/bench_duckdb.py [sf_dir] [trials]
 Prints one JSON line {"queries": {...}, "value": total, ...}.
@@ -15,29 +15,22 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(HERE))
+sys.path.insert(0, HERE)
 
-import duckdb
-
-from bench import HEADLINE, duckdb_threads
+from bench import HEADLINE  # noqa: E402
+from simlib import duck_connection  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 TRIALS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
 
 def main() -> None:
     import __spark_entry__ as e
 
     osql = e.oracle_sql()
-    con = duckdb.connect()
-    con.execute(f"SET threads={duckdb_threads()}")
-    for t in TABLES:
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        src = f"read_parquet('{path}/*.parquet')" if os.path.isdir(path) else f"'{path}'"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM {src}")
+    con = duck_connection(SF_DIR)
     timings: dict[str, float] = {}
     total = 0.0
     for name in HEADLINE:

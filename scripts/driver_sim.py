@@ -1,10 +1,10 @@
 """Full driver simulation: every registered query vs its DuckDB oracle in a
 PLAIN SparkSession (the grading driver owns its own session — build_session
-confs must not be assumed), with the driver's strict comparison semantics:
-column names, row counts, int-vs-float dtype drift, and order-insensitive
-values. Writes per-query wall times so slow queries surface before the
-driver samples them. Its session keeps Spark's 100-entry generated-class
-cache, as a driver's does, so repeated queries recompile their classes.
+confs must not be assumed), judged by `simlib.compare_frames` (column
+names, row counts, int-vs-float dtype drift, order-insensitive values).
+Writes per-query wall times so slow queries surface before the driver
+samples them. Its session keeps Spark's 100-entry generated-class cache,
+as a driver's does, so repeated queries recompile their classes.
 
 Usage: python scripts/driver_sim.py [sf_dir] [only] [--strict-driver]
   sf_dir: default /root/testdata/sf0.01
@@ -17,91 +17,40 @@ Usage: python scripts/driver_sim.py [sf_dir] [only] [--strict-driver]
           sampled are checked under the driver's own comparison form, not
           only the tolerance-based lookalike. Divergences between the two
           verdicts are the artifact's payload (expected: none).
+The session runs on local[$SPARK_GRAFT_CPUS] (all cores when unset).
+Results go to /tmp/driver_sim_results.json.
 """
-import json, time, traceback
-from pyspark.sql import SparkSession
-import sys as _s
-_args = [a for a in _s.argv[1:] if a != "--strict-driver"]
-STRICT = "--strict-driver" in _s.argv[1:]
+import json
+import os
+import sys
+import time
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(HERE))
+sys.path.insert(0, HERE)
+
+from pyspark.sql import SparkSession  # noqa: E402
+
+from simlib import (  # noqa: E402
+    canonical_hash,
+    compare_frames,
+    duck_connection,
+    warm_session,
+)
+
+_args = [a for a in sys.argv[1:] if a != "--strict-driver"]
+STRICT = "--strict-driver" in sys.argv[1:]
 SF_DIR = _args[0] if len(_args) > 0 else "/root/testdata/sf0.01"
 ONLY = set(_args[1].split(",")) if len(_args) > 1 else None
-spark = SparkSession.builder.master("local[8]").getOrCreate()
+spark = SparkSession.builder.master(
+    f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+).getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
-# Warm the JVM + python-worker pool once so the alphabetically-first query's
-# recorded time is engine time, not cold-start (same approach as bench.py).
-spark.range(1_000_000).selectExpr("sum(id) s").collect()
-spark.range(64).repartition(8).mapInPandas(lambda it: it, schema="id bigint").count()
-# Warm the parquet reader code path on the 5-row region dim: the JVM's first
-# parquet scan pays ~2s of class loading that otherwise lands on whichever
-# query sorts first alphabetically (q_active_users in the r3 artifact).
-spark.read.parquet(f"{SF_DIR}/region.parquet").count()
-# ... and the parquet WRITER (output committer, codec, Hadoop FS classes):
-# the first write costs ~1s of class loading otherwise billed to the
-# alphabetically-first sink query (q_compact / q_merge_upsert / q_sink_*).
-import tempfile as _tf
-spark.read.parquet(f"{SF_DIR}/region.parquet").write.mode("overwrite").parquet(
-    _tf.mkdtemp(prefix="warm_write_") + "/region"
-)
-# Warm the Structured Streaming machinery (offset log, state store, memory
-# sink classes) on the 5-row dim so the first streaming query's recorded
-# time is engine time, not ~3.5s of class loading.
-import os as _os, tempfile, uuid
-_rpath = f"{SF_DIR}/region.parquet"
-_rdr = spark.readStream.schema(spark.read.parquet(_rpath).schema)
-if _os.path.isdir(_rpath):
-    _warm_src = _rdr.parquet(_rpath)
-else:
-    _warm_src = _rdr.option("pathGlobFilter", "region.parquet").parquet(SF_DIR)
-_sq = (
-    _warm_src.groupBy("r_regionkey").count()
-    .writeStream.outputMode("complete").format("memory")
-    .queryName("warm_" + uuid.uuid4().hex[:6])
-    .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_warm_"))
-    .trigger(availableNow=True).start()
-)
-_sq.awaitTermination()
-# ... and the stream-stream join machinery (SymmetricHashJoinStateManager,
-# append-mode watermark bookkeeping) — otherwise the alphabetically-first
-# join query (q_stream_chained_stateful) absorbs ~2s of its class loading.
-from pyspark.sql import functions as _F
-_wa = _warm_src.select("r_regionkey", _F.current_timestamp().alias("ts_a")).withWatermark("ts_a", "1 minute")
-_wb = _warm_src.select(_F.col("r_regionkey").alias("rk_b"), _F.current_timestamp().alias("ts_b")).withWatermark("ts_b", "1 minute")
-_sq = (
-    _wa.join(_wb, (_wa.r_regionkey == _wb.rk_b) & (_wa.ts_a >= _wb.ts_b - _F.expr("INTERVAL 1 MINUTE")) & (_wa.ts_a <= _wb.ts_b))
-    .writeStream.outputMode("append").format("memory")
-    .queryName("warm_" + uuid.uuid4().hex[:6])
-    .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_warm_"))
-    .trigger(availableNow=True).start()
-)
-_sq.awaitTermination()
-# ... and the Python DataSource runner (plan serialization + python-source
-# worker infra): first use costs ~4.5s, warm reads are 0.4s. One-tick
-# batch + stream drains against the sim_ticks source.
-import sys as _sys, os as _os2
-_sys.path.insert(0, _os2.path.dirname(_os2.path.dirname(_os2.path.abspath(__file__))))
-from crypto_data_ingestion_script_spark.sources.custom import register as _reg_ds
-_reg_ds(spark)
-spark.read.format("sim_ticks").option("n_ticks", "1").load().count()
-_sq = (
-    spark.readStream.format("sim_ticks").option("max_ticks", "1").load()
-    .writeStream.outputMode("append").format("memory")
-    .queryName("warm_" + uuid.uuid4().hex[:6])
-    .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_warm_"))
-    .trigger(availableNow=True).start()
-)
-_sq.awaitTermination()
-import os, sys; sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-import __spark_entry__ as e
+warm_session(spark, SF_DIR)
+import __spark_entry__ as e  # noqa: E402
+
 qs, osql = e.queries(), e.oracle_sql()
-import duckdb, pandas as pd, numpy as np
-import pandas.api.types as pt
-from simlib import compare_frames, canonical_hash
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    # single-file layout (testdata) or directory-of-part-files (benchdata)
-    p = f"{SF_DIR}/{t}.parquet"
-    src = f"{p}/*.parquet" if _os.path.isdir(p) else p
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+con = duck_connection(SF_DIR)
 results = {}
 for name in sorted(qs):
     if ONLY is not None and name not in ONLY:
@@ -115,8 +64,6 @@ for name in sorted(qs):
         t0 = time.perf_counter()
         o = con.execute(osql[name]).fetchdf()
         rec["oracle_s"] = round(time.perf_counter() - t0, 2)
-        # Shared comparison semantics (scripts/simlib.py) — identical
-        # check in the sf0.01 full sweep and the sf1 structural sweep.
         rec["status"], rec["err"] = compare_frames(s, o)
         if STRICT:
             rec["hash_match"] = canonical_hash(s) == canonical_hash(o)

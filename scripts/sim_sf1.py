@@ -476,79 +476,20 @@ if os.path.exists(PINS_PATH):
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
+from simlib import compare_frames, duck_connection, warm_session  # noqa: E402
+
 spark = (
     SparkSession.builder.master("local[32]")
     .config("spark.driver.memory", "16g")
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
-
-# Warm: JVM codegen, python-worker pool, parquet reader, streaming
-# machinery (offset log, state store, stream-stream join state manager) —
-# same rationale as driver_sim.py.
-spark.range(1_000_000).selectExpr("sum(id) s").collect()
-spark.range(64).repartition(8).mapInPandas(
-    lambda it: it, schema="id bigint"
-).count()
-spark.read.parquet(f"{SF_DIR}/region.parquet").count()
-import tempfile  # noqa: E402
-import uuid  # noqa: E402
-
-_rpath = f"{SF_DIR}/region.parquet"
-_rdr = spark.readStream.schema(spark.read.parquet(_rpath).schema)
-if os.path.isdir(_rpath):
-    _warm_src = _rdr.parquet(_rpath)
-else:
-    _warm_src = _rdr.option("pathGlobFilter", "region.parquet").parquet(SF_DIR)
-_sq = (
-    _warm_src.groupBy("r_regionkey")
-    .count()
-    .writeStream.outputMode("complete")
-    .format("memory")
-    .queryName("warm_" + uuid.uuid4().hex[:6])
-    .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_warm_"))
-    .trigger(availableNow=True)
-    .start()
-)
-_sq.awaitTermination()
-_wa = _warm_src.select(
-    "r_regionkey", F.current_timestamp().alias("ts_a")
-).withWatermark("ts_a", "1 minute")
-_wb = _warm_src.select(
-    F.col("r_regionkey").alias("rk_b"), F.current_timestamp().alias("ts_b")
-).withWatermark("ts_b", "1 minute")
-_sq = (
-    _wa.join(
-        _wb,
-        (_wa.r_regionkey == _wb.rk_b)
-        & (_wa.ts_a >= _wb.ts_b - F.expr("INTERVAL 1 MINUTE"))
-        & (_wa.ts_a <= _wb.ts_b),
-    )
-    .writeStream.outputMode("append")
-    .format("memory")
-    .queryName("warm_" + uuid.uuid4().hex[:6])
-    .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_warm_"))
-    .trigger(availableNow=True)
-    .start()
-)
-_sq.awaitTermination()
+warm_session(spark, SF_DIR)
 
 import __spark_entry__ as e  # noqa: E402
 
 qs, osql = e.queries(), e.oracle_sql()
-
-import duckdb  # noqa: E402
-
-from simlib import compare_frames  # noqa: E402
-
-con = duckdb.connect()
-for t in [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]:
-    p = f"{SF_DIR}/{t}.parquet"
-    src = f"{p}/*.parquet" if os.path.isdir(p) else p
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+con = duck_connection(SF_DIR)
 
 results = {}
 

@@ -5,7 +5,10 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# scripts/simlib.py is the differential harness the tests share.
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
 from crypto_data_ingestion_script_spark.session import build_session
 

@@ -8,6 +8,7 @@ shuffle joins without failing any correctness test."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -78,3 +79,25 @@ def test_bucketed_agg_avoids_shuffle(spark, bucketed_db):
     l = spark.table(f"{bucketed_db}.lineitem_b")
     agg = l.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("qty"))
     assert _node_count(agg, "Exchange") == 0, "bucketed groupBy still shuffled"
+
+
+def test_bucketed_query_tables_are_private_to_the_application(spark, sf_dir):
+    """q_join_bucketed writes its tables under the application's own
+    scratch dir: at a host-wide fixed path, a second Spark process running
+    it over the same sf_dir overwrites the part files this one reads."""
+    from pyspark import SparkFiles
+
+    from crypto_data_ingestion_script_spark.registry import load_all
+
+    load_all()["q_join_bucketed"].fn(spark, sf_dir).collect()
+    root = SparkFiles.getRootDirectory()
+    dbs = [d.name for d in spark.catalog.listDatabases("bucketed_q_*")]
+    tables = [(db, t.name) for db in dbs for t in spark.catalog.listTables(db)]
+    assert tables
+    for db, name in tables:
+        loc = (
+            spark.sql(f"DESCRIBE TABLE EXTENDED {db}.{name}")
+            .filter("col_name = 'Location'")
+            .first()["data_type"]
+        )
+        assert loc.removeprefix("file:").startswith(root + os.sep), loc

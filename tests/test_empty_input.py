@@ -8,8 +8,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from simlib import compare_frames, duck_connection
+
 from crypto_data_ingestion_script_spark.catalog import load
 from crypto_data_ingestion_script_spark.operators.rollup import ohlc_bars
+from crypto_data_ingestion_script_spark.registry import load_all
 from crypto_data_ingestion_script_spark.streaming.stateful import (
     EMPTY_STATE,
     fold_pdf,
@@ -86,60 +89,59 @@ def test_dsir_on_target_free_corpus(spark, sf_dir):
     assert out["dsir_logweight"].notna().all()
 
 
-def _assert_empty_like_oracle(name, spark, zero_row_sf_dir):
-    """Query ``name`` on zero-row tables returns no rows, as its oracle
-    does, with the oracle's column names."""
-    from crypto_data_ingestion_script_spark.registry import load_all
+#: Queries that do not yet match their oracle on zero-row tables. Strict:
+#: a mended query fails its xfail until it leaves this list.
+ZERO_ROW_KNOWN_FAILURES = {
+    # crashes
+    "q_dataset_card": "DIVIDE_BY_ZERO",
+    "q_jaccard_sweep": "DIVIDE_BY_ZERO",
+    "q_kcenter": "IndexError on empty numpy batches",
+    "q_kll_quantiles": "KLL sketch on empty input",
+    "q_woe_iv_kll": "KLL sketch on empty input",
+    # row counts
+    "q_cube": "grand-total row",
+    "q_grouping_sets": "grand-total row",
+    "q_poisson_bootstrap": "grand-total row",
+    "q_rollup": "grand-total row",
+    "q_bellman_ford": "anchor rows",
+    "q_bfs": "anchor rows",
+    "q_length_filter_sweep": "6 rows against 0",
+    # int -> float drift
+    "q_file_metadata": "int vs float column",
+    "q_triangles": "int vs float column",
+}
+SPECS = load_all()
 
-    from .oracle_diff import duck_connection
 
-    spec = load_all()[name]
-    out = spec.fn(spark, zero_row_sf_dir).toPandas()
+@pytest.fixture(scope="module")
+def zero_row_duck(zero_row_sf_dir):
     con = duck_connection(zero_row_sf_dir)
-    try:
-        oracle = con.execute(spec.oracle).fetchdf()
-    finally:
-        con.close()
-    assert len(out) == 0 and len(oracle) == 0
-    assert list(out.columns) == list(oracle.columns)
+    yield con
+    con.close()
 
 
 @pytest.mark.parametrize(
     "name",
     [
-        "q_ann_ivf",
-        "q_ann_lsh",
-        "q_cosine_topk",
-        "q_crosslingual_mine",
-        "q_dedup_embedding",
-        "q_knn_classify",
+        pytest.param(
+            n,
+            marks=pytest.mark.xfail(
+                strict=True, reason=ZERO_ROW_KNOWN_FAILURES[n]
+            ),
+        )
+        if n in ZERO_ROW_KNOWN_FAILURES
+        else n
+        for n in sorted(SPECS)
     ],
 )
-def test_embedding_scans_on_zero_rows(name, spark, zero_row_sf_dir):
-    """The probe-vs-corpus embedding scans on zero-row tables: no probe
-    rows (a (0, 64) probe matrix) and no corpus batches must give an empty
-    result with the oracle's columns, not a numpy crash."""
-    _assert_empty_like_oracle(name, spark, zero_row_sf_dir)
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        "q_sink_bronze",
-        "q_sink_silver",
-        "q_sink_partitioned",
-        "q_merge_upsert",
-        "q_retention",
-        "q_stream_silver",
-        "q_stream_incremental_dedup",
-    ],
-)
-def test_ingest_read_backs_on_zero_rows(name, spark, zero_row_sf_dir):
-    """The bronze/silver round-trips and the stream-dedup verdict sink on
-    an empty day: nothing is written, and the read-back (declared schema,
-    no footer to infer from) returns zero rows with the oracle's
-    columns."""
-    _assert_empty_like_oracle(name, spark, zero_row_sf_dir)
+def test_query_on_zero_rows(name, spark, zero_row_sf_dir, zero_row_duck):
+    """Every registered query on zero-row tables (the empty day a
+    scheduled job must survive) matches its oracle, with the oracle's
+    columns in the oracle's order."""
+    got = SPECS[name].fn(spark, zero_row_sf_dir).toPandas()
+    want = zero_row_duck.execute(SPECS[name].oracle).fetchdf()
+    assert compare_frames(got, want) == ("ok", None)
+    assert list(got.columns) == list(want.columns)
 
 
 def test_verdict_ddl_is_the_written_row(spark, sf_dir):

@@ -11,25 +11,17 @@ skips the execution cost that makes the full sf0.001 oracle run
 
 from __future__ import annotations
 
-import os
-
-import duckdb
 import pytest
+from simlib import duck_connection
 
-from crypto_data_ingestion_script_spark.catalog import TABLE_NAMES
 from crypto_data_ingestion_script_spark.registry import load_all
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in TABLE_NAMES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-    return c
+def con(sf_dir):
+    c = duck_connection(sf_dir)
+    yield c
+    c.close()
 
 
 def test_every_oracle_plans_in_duckdb(con):

@@ -319,13 +319,9 @@ def test_tpch_q11_reuses_the_rollup_exchange(spark, sf_dir):
 def test_tpch_q13_outer_join_keeps_zero_order_customers(spark, sf_dir):
     """The priority exclusion must live in the join condition: customers
     with only urgent orders still appear with c_count = 0."""
-    import duckdb, os
+    from simlib import duck_connection
 
-    con = duckdb.connect()
-    for t in ("customer", "orders"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(sf_dir, t + '.parquet')}'"
-        )
+    con = duck_connection(sf_dir)
     zero = con.execute(
         """SELECT count(*) FROM customer WHERE NOT EXISTS
            (SELECT 1 FROM orders WHERE o_custkey = c_custkey

@@ -7,7 +7,7 @@ import pytest
 
 from crypto_data_ingestion_script_spark.registry import load_all
 
-from .oracle_diff import compare, duck_connection
+from simlib import compare_frames, duck_connection
 
 SPECS = load_all()
 WITH_ORACLE = sorted(n for n, s in SPECS.items() if s.oracle)
@@ -24,10 +24,9 @@ def duck(sf_dir):
 @pytest.mark.parametrize("name", WITH_ORACLE)
 def test_oracle_match(name, spark, sf_dir, duck):
     spec = SPECS[name]
-    sdf = spec.fn(spark, sf_dir)
-    odf = duck.execute(spec.oracle).fetchdf()
-    errs = compare(sdf, odf, name)
-    assert not errs, "\n".join(errs)
+    got = spec.fn(spark, sf_dir).toPandas()
+    want = duck.execute(spec.oracle).fetchdf()
+    assert compare_frames(got, want) == ("ok", None)
 
 
 def test_every_query_has_an_oracle():
@@ -38,6 +37,6 @@ def test_every_query_has_an_oracle():
     assert ROWS_ONLY == [], f"oracle-less queries registered: {ROWS_ONLY}"
 
 
-# NOTE: test_oracle_match materializes via toPandas() inside compare() —
+# NOTE: test_oracle_match materializes via toPandas() —
 # never a bare count(), which would let Catalyst prune computed columns and
 # hide expressions that crash at materialization time (e.g. ANSI overflow).

@@ -107,6 +107,10 @@ def _temp_views(spark) -> set:
     return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
+def _user_functions(spark) -> set:
+    return {r[0] for r in spark.sql("SHOW USER FUNCTIONS").collect()}
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -129,14 +133,16 @@ def _temp_views(spark) -> set:
 def test_repeated_calls_leave_no_session_residue(spark, sf_dir, name):
     """A long-lived caller-owned session runs each query many times: a
     query may not leave temp views (a memory sink's view pins its rows),
-    streaming checkpoint dirs, or session confs behind."""
+    functions, streaming checkpoint dirs, or session confs behind."""
     fn = load_all()[name].fn
     for k, v in _PINNED_CONFS.items():
         spark.conf.set(k, v)
     views, ckpts = _temp_views(spark), _ckpt_dirs()
+    functions = _user_functions(spark)
     for _ in range(2):
         assert fn(spark, sf_dir).count() > 0
     assert _temp_views(spark) == views
+    assert _user_functions(spark) == functions
     assert _ckpt_dirs() - ckpts == set()
     assert {k: spark.conf.get(k) for k in _PINNED_CONFS} == _PINNED_CONFS
 

@@ -1,26 +1,19 @@
-"""The shared driver-sim comparator (scripts/simlib.py) IS the local
-definition of "green" for both the sf0.01 full sweep and the sf1
-structural sweep — so its own semantics need pinning: the checks it must
-flag (column drift, row drift, int-vs-float dtype drift, value drift) and
-the hazards it must NOT flag (row order, float noise below tolerance,
-float-tied rows whose order differs between engines — the q_entropy
-sf0.001 incident)."""
+"""`scripts/simlib.compare_frames` is the one definition of "a query
+matches its oracle" for Tier-1, the driver sweeps and perfbench's
+`ok_frac`, so its rules are pinned here: what it must flag (column drift,
+row drift, int-vs-float dtype drift, value drift, a float gap above 1e-9
+relative) and what it must NOT flag (row order, float noise below
+tolerance, float-tied rows whose order differs between engines — the
+q_entropy sf0.001 incident — and equal timestamps of which one side
+carries a time zone)."""
 
 import os
-import sys
+import shutil
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(
-    0,
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-    ),
-)
-
-from simlib import compare_frames  # noqa: E402
+from simlib import compare_frames, duck_connection
 
 
 def test_equal_frames_any_order_pass():
@@ -36,10 +29,8 @@ def test_column_row_and_value_drift_flagged():
         compare_frames(s, pd.DataFrame({"k": [1, 2], "v": [1.0, 2.0]}))[0]
         == "rows"
     )
-    assert (
-        compare_frames(s, pd.DataFrame({"k": [1], "v": [1.5]}))
-        == ("values", "v")
-    )
+    status, err = compare_frames(s, pd.DataFrame({"k": [1], "v": [1.5]}))
+    assert (status, err) == ("values", "v at rows [0]: [1.0] vs [1.5]")
 
 
 def test_int_vs_float_dtype_drift_flagged():
@@ -69,4 +60,41 @@ def test_array_valued_object_columns_compare():
     o = pd.DataFrame({"k": [1], "arr": [[1, 2]]})
     assert compare_frames(s, o) == ("ok", None)
     o2 = pd.DataFrame({"k": [1], "arr": [[1, 3]]})
-    assert compare_frames(s, o2) == ("values", "arr")
+    assert compare_frames(s, o2) == (
+        "values", "arr at rows [0]: [(1, 2)] vs [(1, 3)]"
+    )
+
+
+def test_relative_float_gap_above_tolerance_flagged():
+    """Floats match within 1e-9 relative, not 1e-7: a 3e-8 gap fails."""
+    s = pd.DataFrame({"v": [0.18616597]})
+    o = pd.DataFrame({"v": [0.18616597 * (1 + 3e-8)]})
+    assert compare_frames(s, o)[0] == "values"
+
+
+def test_tz_aware_and_naive_timestamps_compare():
+    """A tz-aware column compares with its naive twin by wall time."""
+    ts = pd.to_datetime(["2026-01-01 05:00:00", "2026-01-02 06:30:00"])
+    s = pd.DataFrame({"ts": ts})
+    o = pd.DataFrame({"ts": ts.tz_localize("UTC")})
+    assert compare_frames(s, o) == ("ok", None)
+    o2 = pd.DataFrame({"ts": ts.tz_localize("UTC") + pd.Timedelta(seconds=1)})
+    assert compare_frames(s, o2)[0] == "values"
+
+
+def test_duck_connection_reads_both_layouts(sf_dir, tmp_path):
+    """Each table is a view whether `<t>.parquet` is one file (testdata)
+    or a directory of part files (benchdata)."""
+    for name in os.listdir(sf_dir):
+        if name.endswith(".parquet"):
+            shutil.copy(os.path.join(sf_dir, name), tmp_path / name)
+    (tmp_path / "orders.parquet").unlink()
+    (tmp_path / "orders.parquet").mkdir()
+    for part in ("part-0.parquet", "part-1.parquet"):
+        shutil.copy(
+            os.path.join(sf_dir, "orders.parquet"), tmp_path / "orders.parquet" / part
+        )
+    count = "SELECT count(*) FROM orders"
+    with duck_connection(sf_dir) as single, duck_connection(str(tmp_path)) as parts:
+        one = single.execute(count).fetchone()[0]
+        assert parts.execute(count).fetchone()[0] == 2 * one > 0

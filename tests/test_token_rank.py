@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from crypto_data_ingestion_script_spark.llm import dedup as dd
 from crypto_data_ingestion_script_spark.registry import load_all
 
-from .oracle_diff import compare, duck_connection
+from simlib import compare_frames, duck_connection
 
 SPECS = load_all()
 
@@ -86,8 +86,8 @@ def test_similarity_joins_green_on_two_pass_path(name, spark, sf_dir, monkeypatc
     spec = SPECS[name]
     con = duck_connection(sf_dir)
     try:
-        odf = con.execute(spec.oracle).fetchdf()
-        errs = compare(spec.fn(spark, sf_dir), odf, name)
-        assert not errs, "\n".join(errs)
+        want = con.execute(spec.oracle).fetchdf()
+        got = spec.fn(spark, sf_dir).toPandas()
+        assert compare_frames(got, want) == ("ok", None)
     finally:
         con.close()

@@ -69,6 +69,33 @@ def test_mmr_greedy_invariants(spark, sf_dir):
     )
 
 
+def test_mmr_batch_rounds_scores_like_its_oracle():
+    """0.7 * 0.39452286 - 0.3 * 0.30000009 is 0.18616597499999998 (q_mmr's
+    step-4 score at sf0.01), which scales by 1e8 to exactly 18616597.5:
+    DuckDB's round(x, 8), which the oracle uses, gives 0.18616598, and
+    HALF_UP on the decimal repr gives 0.18616597. The batch greedy must
+    score the way the oracle does."""
+    import duckdb
+    import pandas as pd
+
+    from crypto_data_ingestion_script_spark.llm.similarity import _mmr_batch
+
+    rel = {1: 0.9, 2: 0.39452286, 3: 0.1, 4: 0.1, 5: 0.1}
+    sim = {(2, 1): 0.30000009}
+    pdf = pd.DataFrame(
+        [(a, rel[a], b, sim.get((a, b), sim.get((b, a), 0.0)))
+         for a in rel for b in rel if a != b],
+        columns=["va", "rel_a", "vb", "sim"],
+    )
+    picks = _mmr_batch(pdf).set_index("step")
+    want = duckdb.sql(
+        "SELECT round(0.7 * 0.39452286::DOUBLE - 0.3 * 0.30000009::DOUBLE, 8)"
+    ).fetchone()[0]
+    assert want == 0.18616598
+    assert picks.loc[2, "vec_id"] == 2
+    assert picks.loc[2, "mmr_score"] == want
+
+
 def test_ivfpq_gate_and_adc_consistency(spark, sf_dir):
     import numpy as np
 
