@@ -180,7 +180,8 @@ def q_source_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    from ..streaming.jobs import stream_ckpt_dir
+    from ..session import session_confs
+    from ..streaming.jobs import LOCAL_CKPT_CONFS, stream_ckpt_dir
 
     register(spark)
     name = f"sim_ticks_{uuid.uuid4().hex[:8]}"
@@ -189,19 +190,22 @@ def q_source_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ckpt = stream_ckpt_dir("ckpt_ds_")
     try:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        # Python stream sources don't support availableNow (the v2
-        # micro-batch wrapper falls back to one batch); drain until the
-        # finite source reports no new data, then stop.
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
+        # The harness checkpoint's manager, held until the query ends
+        # (see streaming.jobs._run_available).
+        with session_confs(spark, LOCAL_CKPT_CONFS):
+            q = (
+                stream.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            # Python stream sources don't support availableNow (the v2
+            # micro-batch wrapper falls back to one batch); drain until
+            # the finite source reports no new data, then stop.
+            q.processAllAvailable()
+            q.stop()
+            q.awaitTermination()
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     out = spark.table(name)

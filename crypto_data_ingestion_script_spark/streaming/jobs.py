@@ -47,18 +47,35 @@ EVENTS_DDL = (
 
 def stream_ckpt_dir(prefix: str = "ckpt_") -> str:
     """Checkpoint dir for the availableNow test harness: RAM-backed
-    /dev/shm when present, OS tmp otherwise. Every micro-batch commit
-    fsyncs an offset log, a commit log, and one state-store delta file
-    per shuffle partition (one per core, see ``_run_available``) per
-    stateful operator — a chained join+aggregation batch is ~150 small
-    fsyncs, which is why streaming walls were hypersensitive to host I/O
-    contention (a concurrent sweep read q_stream_chained_stateful at
-    41 s vs 6 s idle). Durability across driver restarts is irrelevant for a
-    fresh-per-call harness checkpoint; a production deployment points
-    checkpointLocation at durable storage and pays that fsync cost by
-    design."""
+    /dev/shm when present, OS tmp otherwise. Every micro-batch commits an
+    offset log, a commit log and one state-store delta file per shuffle
+    partition (one per core, see ``_run_available``) per stateful
+    operator. Without the native Hadoop library each of those files costs
+    forked processes, not I/O: ``RawLocalFileSystem`` runs ``chmod`` for
+    every mkdir and file create, and Spark's default ``FileContext``
+    checkpoint manager runs ``readlink`` for every rename. Each stream of
+    the perfbench ``ingest_hourly`` ops (local[2]) writes 8 checkpoint
+    files and forked 80 ``readlink`` (10 per file: each rename also moves
+    the file's ``.crc``) and ~30 ``chmod`` (JFR ``jdk.ProcessStart``,
+    4-vCPU host). Harness checkpoints therefore write through
+    ``LOCAL_CKPT_CONFS``, which forks no ``readlink``. Durability
+    across driver restarts is irrelevant for a fresh-per-call harness
+    checkpoint; a production deployment points checkpointLocation at
+    durable storage and keeps Spark's default manager."""
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
     return tempfile.mkdtemp(prefix=prefix, dir=base)
+
+
+#: Checkpoint manager of every harness checkpoint (``stream_ckpt_dir``).
+#: It renames with ``File.renameTo``, which is atomic on a local file
+#: system and forks nothing; Spark's default for ``file:`` paths, the
+#: ``FileContext`` manager, forks ``readlink`` for each rename.
+LOCAL_CKPT_CONFS = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
+}
 
 
 #: Raw dtype of events.ts per sf_dir — parquet generations differ (older
@@ -128,20 +145,27 @@ def _hour_bars(out: DataFrame) -> DataFrame:
     )
 
 
-#: Per-batch engine progress of the LAST availableNow-driven query
-#: (list of StreamingQueryProgress dicts). Observability hook only — it
-#: exposes the engine's own durationMs / stateOperators breakdown to tests;
-#: no query semantics depend on it.
-LAST_QUERY_PROGRESS: list = []
-
-
 def _run_available(spark: SparkSession, writer: DataStreamWriter) -> None:
     """Drive a configured stream writer to completion: fresh harness
-    checkpoint, availableNow trigger, progress kept in
-    ``LAST_QUERY_PROGRESS``. The checkpoint makes restarts exactly-once —
-    the reference's restart duplicate-key hazard (dataCollector.py:146-150)
-    is structurally gone — but once the query has terminated it is dead
-    weight (in RAM when /dev/shm backed), so it is removed either way.
+    checkpoint, availableNow trigger. The checkpoint makes restarts
+    exactly-once — the reference's restart duplicate-key hazard
+    (dataCollector.py:146-150) is structurally gone — but once the query
+    has terminated it is dead weight (in RAM when /dev/shm backed), so it
+    is removed either way.
+
+    The checkpoint is written through ``LOCAL_CKPT_CONFS``' FileSystem
+    manager. That is safe only because this checkpoint is local, owned by
+    this one call and deleted at its end: the manager relies on rename
+    being atomic, which a local file system gives and an object store does
+    not. The key is held until ``awaitTermination()`` returns, not only
+    around ``start()``: the file source's log (``sources/0``) is created
+    on the stream thread from the caller's session after ``start()``
+    returns; with the key restored right after ``start()``, 18 stream
+    runs still forked 24 ``readlink``, all from that log's writes.
+    ``session_confs`` holds ``session._CONF_LOCK`` all that time, so no
+    ``foreachBatch`` callback may call ``session_confs`` (it would wait on
+    the lock for ever); ``write_silver`` and ``incremental_near_dedup``
+    do not.
 
     The stream starts with one shuffle partition per core, not
     ``configure()``'s batch floor of 8: it runs in a session cloned at
@@ -150,18 +174,17 @@ def _run_available(spark: SparkSession, writer: DataStreamWriter) -> None:
     clone holds the count from then on (and the first batch records it in
     the fresh checkpoint), so the caller's conf is restored as soon as
     ``start()`` returns."""
-    global LAST_QUERY_PROGRESS
     ckpt = stream_ckpt_dir()
+    cores = {"spark.sql.shuffle.partitions": str(session_cores(spark))}
     try:
-        cores = {"spark.sql.shuffle.partitions": str(session_cores(spark))}
-        with session_confs(spark, cores):
-            q = (
-                writer.option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
-        LAST_QUERY_PROGRESS = [p.json for p in q.recentProgress]
+        with session_confs(spark, LOCAL_CKPT_CONFS):
+            with session_confs(spark, cores):
+                q = (
+                    writer.option("checkpointLocation", ckpt)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+            q.awaitTermination()
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
 

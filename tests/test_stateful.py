@@ -5,14 +5,66 @@ from __future__ import annotations
 import datetime as dt
 import json
 import math
+import threading
 
 import pandas as pd
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 from crypto_data_ingestion_script_spark.registry import load_all
 from crypto_data_ingestion_script_spark.streaming.stateful import _update_ohlc_state
 
 SPECS = load_all()
+
+
+class _ProgressRecorder(StreamingQueryListener):
+    """Keeps every query's progress events, by run id. Progress and
+    termination events reach a listener asynchronously, so ``last()``
+    waits for the newest query's ``onQueryTerminated`` (delivered after
+    its progress events) before it reads."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._runs: list[str] = []
+        self._progress: dict[str, list] = {}
+        self._done: dict[str, threading.Event] = {}
+
+    def _run(self, run_id) -> str:
+        run = str(run_id)
+        with self._lock:
+            if run not in self._done:
+                self._runs.append(run)
+                self._progress[run] = []
+                self._done[run] = threading.Event()
+        return run
+
+    def onQueryStarted(self, event):
+        self._run(event.runId)
+
+    def onQueryProgress(self, event):
+        run = self._run(event.progress.runId)
+        self._progress[run].append(json.loads(event.progress.json))
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self._done[self._run(event.runId)].set()
+
+    def last(self, timeout: float = 60.0) -> list[dict]:
+        """Progress dicts of the most recently started query."""
+        assert self._runs, "no streaming query started"
+        run = self._runs[-1]
+        assert self._done[run].wait(timeout), "query never reported termination"
+        return self._progress[run]
+
+
+@pytest.fixture
+def stream_progress(spark):
+    recorder = _ProgressRecorder()
+    spark.streams.addListener(recorder)
+    yield recorder
+    spark.streams.removeListener(recorder)
 
 
 class _StubState:
@@ -147,16 +199,13 @@ def test_ohlc_reference_parity_query_planted_zeros(spark, tmp_path):
     assert b["open_price_ref"] is None  # no non-zero tick ever opened it
 
 
-def test_session_timeout_toy_islands(spark, tmp_path):
+def test_session_timeout_toy_islands(spark, tmp_path, stream_progress):
     """q_stream_session_timeout on a planted corpus: gap-split sessions
     emit 'gap', each user's final session emits 'timeout' (fired by the
     engine's EventTimeTimeout, not by a data row), and the state store
     ends bounded by ACTIVE keys (only the watermark-advancing sentinel
     remains resident)."""
     import datetime as dt
-    import json
-
-    from crypto_data_ingestion_script_spark.streaming import jobs
 
     base = dt.datetime(2024, 1, 1, 10, 0, 0)
     mins = lambda m: base + dt.timedelta(minutes=m)  # noqa: E731
@@ -194,7 +243,7 @@ def test_session_timeout_toy_islands(spark, tmp_path):
     )
     # State boundedness: timed-out users are REMOVED; only the sentinel
     # key (whose own timeout the watermark never passes) stays resident.
-    progress = [json.loads(p) for p in jobs.LAST_QUERY_PROGRESS]
+    progress = stream_progress.last()
     finals = [
         op["numRowsTotal"]
         for p in progress[-1:]
@@ -204,12 +253,11 @@ def test_session_timeout_toy_islands(spark, tmp_path):
 
 
 @pytest.mark.parametrize("name", ["q_stream_tumbling", "q_stream_rocksdb"])
-def test_stream_keeps_one_state_store_per_core(spark, sf_dir, name):
+def test_stream_keeps_one_state_store_per_core(spark, sf_dir, name, stream_progress):
     """A stream runs with AQE off, so nothing coalesces its state stores:
     every stateful operator gets one per core, not the batch floor of 8,
     and the caller's shuffle-partition conf reads the same afterwards."""
     from crypto_data_ingestion_script_spark.session import session_cores
-    from crypto_data_ingestion_script_spark.streaming import jobs
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
@@ -217,7 +265,38 @@ def test_stream_keeps_one_state_store_per_core(spark, sf_dir, name):
     assert spark.conf.get(key) == before
     parts = [
         op["numShufflePartitions"]
-        for p in map(json.loads, jobs.LAST_QUERY_PROGRESS)
+        for p in stream_progress.last()
         for op in p.get("stateOperators", [])
     ]
     assert parts and set(parts) == {session_cores(spark)}, parts
+
+
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_MANAGERS = "org.apache.spark.sql.execution.streaming.checkpointing."
+_FILE_CONTEXT_MANAGER = _MANAGERS + "FileContextBasedCheckpointFileManager"
+_FILE_SYSTEM_MANAGER = _MANAGERS + "FileSystemBasedCheckpointFileManager"
+
+
+@pytest.mark.parametrize("preset", [None, _FILE_CONTEXT_MANAGER])
+def test_harness_checkpoint_uses_filesystem_manager(spark, tmp_path, preset):
+    """Every micro-batch of a harness-driven stream runs with the
+    FileSystem checkpoint manager, and the caller's value of the key
+    (unset, or Spark's FileContext manager) reads the same afterwards."""
+    from crypto_data_ingestion_script_spark.streaming.jobs import _run_available
+
+    src = tmp_path / "src"
+    spark.range(3).write.parquet(str(src))
+    seen = []
+
+    def record(batch_df, batch_id):
+        seen.append(batch_df.sparkSession.conf.get(_CKPT_MANAGER_KEY, None))
+
+    if preset is not None:
+        spark.conf.set(_CKPT_MANAGER_KEY, preset)
+    try:
+        stream = spark.readStream.schema("id bigint").parquet(str(src))
+        _run_available(spark, stream.writeStream.foreachBatch(record))
+        assert seen and set(seen) == {_FILE_SYSTEM_MANAGER}, seen
+        assert spark.conf.get(_CKPT_MANAGER_KEY, None) == preset
+    finally:
+        spark.conf.unset(_CKPT_MANAGER_KEY)
